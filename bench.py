@@ -215,6 +215,26 @@ def probe_disagreement(calib: dict) -> float:
     return worst
 
 
+def normalize_by_probe(
+    timings: dict[str, float], calib: dict
+) -> tuple[float, dict[str, float] | None]:
+    """Probe-normalized per-query seconds (r14, verdict r13 #5), so
+    cross-round comparisons stop being hostage to which contention
+    window a record was taken in. The normalizer is the geometric
+    mean of the record's OWN start/end JVM probes (the codegen-scan
+    probe — what a whole-stage query feels); a plan regression moves
+    the normalized number, a slower container moves numerator and
+    denominator together. A probe that reads 0 (clock resolution, a
+    failed probe) leaves nothing to normalize by: the map is ``None``
+    and the record still ships after its full timing pass."""
+    jvm_norm = (
+        calib["start"]["jvm_sum_sec"] * calib["end"]["jvm_sum_sec"]
+    ) ** 0.5
+    if jvm_norm <= 0:
+        return jvm_norm, None
+    return jvm_norm, {k: round(v / jvm_norm, 2) for k, v in timings.items()}
+
+
 def timing_pass(spark, qmap, sf_dir: str, sf: float) -> dict:
     """One full protocol pass: start probe, headline min-of-3,
     rotation min-of-2, end probe. Returns the record payload with
@@ -243,16 +263,7 @@ def timing_pass(spark, qmap, sf_dir: str, sf: float) -> dict:
         rotation[name] = round(best, 3)
 
     calib = {"start": calib_start, "end": calibrate(spark)}
-    # r14 (verdict r13 #5): stamp probe-normalized per-query seconds
-    # alongside the raw ones so cross-round comparisons stop being
-    # hostage to which contention window a record was taken in. The
-    # normalizer is the geometric mean of the record's OWN start/end
-    # JVM probes (the codegen-scan probe — what a whole-stage query
-    # feels); a plan regression moves the normalized number, a slower
-    # container moves numerator and denominator together.
-    jvm_norm = (
-        calib["start"]["jvm_sum_sec"] * calib["end"]["jvm_sum_sec"]
-    ) ** 0.5
+    jvm_norm, normalized = normalize_by_probe(timings, calib)
     return {
         "metric": "headline_queries_total_sec",
         "value": round(sum(timings.values()), 3),
@@ -262,9 +273,7 @@ def timing_pass(spark, qmap, sf_dir: str, sf: float) -> dict:
         "rotation": {"index": rot_idx, "queries": rotation},
         "calib": calib,
         "jvm_probe_geomean": round(jvm_norm, 4),
-        "queries_normalized": {
-            k: round(v / jvm_norm, 2) for k, v in timings.items()
-        },
+        "queries_normalized": normalized,
         "probe_disagreement": round(probe_disagreement(calib), 3),
     }
 

@@ -1270,7 +1270,14 @@ from hivetomysql_spark.queries import register
 from hivetomysql_spark.tables import load_table
 
 
-
+# Invariant of the shingle explode_outer in text_dedup_threshold_sweep
+# below: ``arr`` is never null or empty, because
+# sequence(1, greatest(size(w) - 2, 1)) yields at least one index.
+# Without it explode_outer would keep a g=NULL row whose xxhash64(NULL)
+# is the seed constant: one phantom shingle shared by every such doc,
+# forming spurious pairs. Keep the greatest(..., 1) floor in any
+# refactor. (The note sits outside the function because its source is
+# part of the sf1/sf10 certification hash.)
 @register(
     "text_dedup_threshold_sweep",
     oracle="""

@@ -14,6 +14,8 @@ from __future__ import annotations
 import json
 import sys
 
+import pytest
+
 sys.path.insert(0, "/root/repo")
 
 import bench  # noqa: E402
@@ -101,3 +103,14 @@ def test_emit_writes_low_core_record_beside_script(tmp_path, monkeypatch, capsys
     parsed = json.loads(out_lines[-1])
     assert parsed["queries"] == payload["queries"]
     assert parsed["cpus"] == 8
+
+
+def test_zero_probe_skips_normalization_instead_of_raising():
+    timings = {"q1": 1.2, "q2": 0.4}
+    for start, end in ((0.0, 0.08), (0.08, 0.0), (0.0, 0.0)):
+        calib = {"start": {"jvm_sum_sec": start}, "end": {"jvm_sum_sec": end}}
+        assert bench.normalize_by_probe(timings, calib) == (0.0, None)
+    calib = {"start": {"jvm_sum_sec": 0.08}, "end": {"jvm_sum_sec": 0.08}}
+    norm, normalized = bench.normalize_by_probe(timings, calib)
+    assert norm == pytest.approx(0.08)
+    assert normalized == {"q1": 15.0, "q2": 5.0}
