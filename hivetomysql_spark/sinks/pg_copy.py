@@ -38,12 +38,15 @@ Modes mirror the JDBC sink's idempotency ladder:
 Scale notes (100 TB / 1000-executor design): parallelism =
 partitions; ``num_partitions`` caps the concurrent COPY streams the
 target must absorb (same knob and default as the JDBC sink's
-connection cap). Rows stay columnar from the JVM to ``psql``: each
-task receives Arrow record batches (``mapInArrow``, no pandas
-conversion), and ``pyarrow.compute`` kernels cast, escape, NULL-mark
-and tab-join whole columns, so the COPY ``text`` block handed to
-psql's stdin is the joined array's value buffer — no Python work per
-row or per value.
+connection cap). A write is one Spark job of one stage: the cap is a
+narrow ``coalesce``, and each task's row count comes back to the
+driver as one collected row, so no shuffle or aggregate stage
+follows the COPY tasks. Rows stay columnar from the JVM to
+``psql``: each task receives Arrow record batches (``mapInArrow``,
+no pandas conversion), and ``pyarrow.compute`` kernels cast, escape,
+NULL-mark and tab-join whole columns, so the COPY ``text`` block
+handed to psql's stdin is the joined array's value buffer — no
+Python work per row or per value.
 """
 
 from __future__ import annotations
@@ -55,7 +58,6 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -174,8 +176,9 @@ def _copy_partitions(
     df: DataFrame, table: str, psql_args: list[str]
 ) -> int:
     """Distributed COPY: each task opens ONE psql COPY subprocess and
-    streams all its Arrow batches through it. Returns rows written
-    (summed from per-task counts — the action that runs the job)."""
+    streams all its Arrow batches through it. Returns rows written:
+    each task yields its count as one row, and the driver sums the
+    collected rows (no aggregate, so no second stage)."""
     cols_sql = ", ".join(_quote_ident(c) for c in df.columns)
     copy_sql = f"COPY {table} ({cols_sql}) FROM STDIN"
     args = list(psql_args)
@@ -212,8 +215,7 @@ def _copy_partitions(
                 proc.kill()
         yield pa.RecordBatch.from_pydict({"rows": pa.array([n], pa.int64())})
 
-    out = df.mapInArrow(sink, "rows long")
-    return int(out.agg(F.sum("rows")).first()[0] or 0)
+    return sum(r[0] for r in df.mapInArrow(sink, "rows long").collect())
 
 
 def write_pg_copy(
@@ -234,9 +236,9 @@ def write_pg_copy(
     promotes staging. A concurrent reader holds its snapshot; a
     failure before COMMIT leaves the target untouched (pytest pins
     both, tests/test_pg_copy_sink.py)."""
-    n_parts = num_partitions or DEFAULT_MAX_COPY_STREAMS
-    if df.rdd.getNumPartitions() > n_parts:
-        df = df.coalesce(n_parts)
+    # coalesce never adds partitions: a frame at or below the cap
+    # keeps its own, and planning needs no partition-count probe
+    df = df.coalesce(num_partitions or DEFAULT_MAX_COPY_STREAMS)
 
     qt = _quote_ident(table)
     if mode == "append":

@@ -40,7 +40,7 @@ from pyspark.sql.datasource import (
 from hivetomysql_spark.errors import RowArityError, MissingHeaderError
 
 
-def _dump_files(path: str) -> list[str]:
+def _files(path: str) -> list[str]:
     if os.path.isdir(path):
         return sorted(
             f
@@ -48,6 +48,16 @@ def _dump_files(path: str) -> list[str]:
             if os.path.isfile(f)
         )
     return [path]
+
+
+def _dump_files(path: str) -> list[str]:
+    """The dump files of ``path``: the file itself, or a directory's
+    files minus the markers a Hadoop job leaves beside them, which
+    Spark's file index skips too: ``_``-prefixed (``_SUCCESS``) here,
+    ``.``-prefixed (``.crc``) already by ``glob``."""
+    if not os.path.isdir(path):
+        return [path]
+    return [f for f in _files(path) if not os.path.basename(f).startswith("_")]
 
 
 def _read_header(path: str) -> list[str]:
@@ -83,7 +93,7 @@ class HiveDumpDataSource(DataSource):
     def writer(self, schema, overwrite: bool) -> "HiveDumpWriter":
         path = self._path()
         if overwrite and os.path.isdir(path):
-            for f in _dump_files(path):
+            for f in _files(path):
                 os.remove(f)
         return HiveDumpWriter(schema, path)
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from hivetomysql_spark.errors import MissingHeaderError
 
@@ -115,6 +116,75 @@ def read_jdbc(
     return reader.load()
 
 
+def _is_hidden(name: str) -> bool:
+    # Spark's file index skips these names (``_SUCCESS``, ``.crc``)
+    return name.startswith(("_", "."))
+
+
+def _dump_files(fs, jvm, path: str) -> list:
+    """The files Spark's CSV source reads for ``path``, in path order:
+    each glob match that is a file, or the files directly inside a
+    matched directory, minus hidden names."""
+    files = []
+    for st in sorted(fs.globStatus(jvm.org.apache.hadoop.fs.Path(path)) or [],
+                     key=lambda s: s.getPath().toString()):
+        if st.isDirectory():
+            children = sorted(fs.listStatus(st.getPath()),
+                              key=lambda c: c.getPath().getName())
+            files += [c for c in children if c.isFile()
+                      and not _is_hidden(c.getPath().getName())]
+        elif not _is_hidden(st.getPath().getName()):
+            files.append(st)
+    return files
+
+
+def _header_line(spark: SparkSession, path: str) -> str | None:
+    """The first line that Spark's CSV schema inference would take as
+    the header: in the first file of ``path`` holding one, the first
+    line that is not empty once spaces are trimmed. Read on the driver
+    through the session's Hadoop ``FileSystem``, decompressing by file
+    extension like Spark's text reader (``.gz`` etc.). ``None`` when no
+    file has such a line."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(conf)
+    codecs = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+    for st in _dump_files(fs, jvm, path):
+        if st.getLen() == 0:
+            continue
+        stream = fs.open(st.getPath())
+        try:
+            codec = codecs.getCodec(st.getPath())
+            if codec is not None:
+                stream = codec.createInputStream(stream)
+            # Hadoop's default line splitting (LF, CRLF or CR), as in
+            # Spark's text reader
+            reader = jvm.org.apache.hadoop.util.LineReader(stream)
+            text = jvm.org.apache.hadoop.io.Text()
+            while reader.readLine(text) > 0:
+                line = text.toString()
+                if line.strip(" "):
+                    return line
+        finally:
+            stream.close()
+    return None
+
+
+def _header_names(tokens: list[str], case_sensitive: bool) -> list[str]:
+    """Column names Spark's CSV inference gives a header with
+    ``nullValue=NULL``: an empty or ``NULL`` field becomes ``_c<i>``,
+    a name occurring twice (case-insensitively unless
+    ``case_sensitive``) gets its index appended."""
+    tokens = [t or "NULL" for t in tokens]  # the parser reads "" as nullValue
+    key = (lambda t: t) if case_sensitive else str.lower
+    seen = [key(t) for t in tokens]
+    dupes = {k for k in seen if seen.count(k) > 1}
+    return [
+        f"_c{i}" if t == "NULL" else f"{t}{i}" if key(t) in dupes else t
+        for i, t in enumerate(tokens)
+    ]
+
+
 def read_tsv_dump(spark: SparkSession, path: str) -> DataFrame:
     """Read a reference-native Hive TSV dump, all columns as strings.
 
@@ -129,16 +199,33 @@ def read_tsv_dump(spark: SparkSession, path: str) -> DataFrame:
       rows where the first column equals its own header name.
     * all-varchar model (README.md:17) — every column StringType.
 
+    The header is read on the driver, not by a Spark job: building
+    this plan starts no job. The CSV reader gets an all-string schema
+    named the way its own header inference would name it (so the
+    per-file header check still matches), then the names are
+    stripped. ``path`` may be a file, a directory or a glob; the
+    header comes from the first file in path order that has one, so
+    every file of one dump must share it. A header line holding a CSV
+    quote character, or no header line at all, leaves the naming (or
+    the error) to Spark's inference, which then runs one job.
+
     Raises :class:`MissingHeaderError` (reference exit 9995) when the
-    file is empty.
+    dump has no header line.
     """
-    df = (
+    reader = (
         spark.read.option("sep", "\t")
         .option("header", "true")
         .option("nullValue", "NULL")
-        .option("inferSchema", "false")
-        .csv(path)
     )
+    header = _header_line(spark, path)
+    if header is None or '"' in header:
+        df = reader.option("inferSchema", "false").csv(path)
+    else:
+        case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+        names = _header_names(header.split("\t"), case_sensitive)
+        df = reader.schema(
+            StructType([StructField(n, StringType()) for n in names])
+        ).csv(path)
     if not df.columns:
         raise MissingHeaderError(f"no header line in {path}")
     # strip "table." prefixes (HiveToMysql.java:532-545)

@@ -122,3 +122,42 @@ def test_hivedump_writer_rejects_tabs(spark, tmp_path):
         df.write.format("hivedump").mode("overwrite").option(
             "path", str(tmp_path / "bad")
         ).save()
+
+
+def _read_hivedump(spark, path):
+    from hivetomysql_spark.sources.hivedump_datasource import (
+        HiveDumpDataSource,
+    )
+
+    spark.dataSource.register(HiveDumpDataSource)
+    df = spark.read.format("hivedump").option("path", path).load()
+    return df.columns, sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_hivedump_reads_crlf_dump_like_lf(spark, tmp_path):
+    """The reference's ``readLine`` ends a line at LF, CRLF or CR; a
+    CRLF dump must read exactly like its LF twin: no ``\\r`` on the last
+    header name or the last value, and echoes of the CRLF header
+    still dropped."""
+    text = "t.a\tt.b\n1\tx\nt.a\tt.b\n2\tNULL\n"
+    (tmp_path / "lf.dump").write_bytes(text.encode())
+    (tmp_path / "crlf.dump").write_bytes(text.replace("\n", "\r\n").encode())
+    want = (["a", "b"], [("1", "x"), ("2", None)])
+    assert _read_hivedump(spark, str(tmp_path / "lf.dump")) == want
+    assert _read_hivedump(spark, str(tmp_path / "crlf.dump")) == want
+
+
+def test_hivedump_directory_skips_hadoop_marker_files(spark, tmp_path):
+    """``_SUCCESS`` sorts before ``part-*``; it and other ``_``/``.``
+    marker files are not dumps and must not be taken for the header
+    file or read as data."""
+    d = tmp_path / "dump"
+    d.mkdir()
+    (d / "_SUCCESS").write_bytes(b"")
+    (d / "_committer.json").write_text('{"job": "x"}\n')
+    (d / ".part-00000.dump.crc").write_bytes(b"crc\x00junk")
+    (d / "part-00000.dump").write_text("t.a\tt.b\n1\tx\n")
+    (d / "part-00001.dump").write_text("t.a\tt.b\n2\ty\n")
+    assert _read_hivedump(spark, str(d)) == (
+        ["a", "b"], [("1", "x"), ("2", "y")]
+    )

@@ -162,3 +162,40 @@ def test_parallel_streams_exact_count(pg, spark):
     assert _q(pg, "SELECT sum(id) FROM t_par") == str(
         20_000 * 19_999 // 2
     )
+
+
+def test_staged_write_of_a_file_scan_is_one_single_stage_job(
+    pg, spark, spark_jobs, tmp_path
+):
+    from hivetomysql_spark.sources import read_tsv_dump
+
+    dump = tmp_path / "dump.tsv"
+    dump.write_text(
+        "t.id\tt.txt\n"
+        + "".join(f"{i}\tv{i}\n" for i in range(1000))
+        + "t.id\tt.txt\n",
+        encoding="utf-8",
+    )
+    _q(pg, "DROP TABLE IF EXISTS t_job; "
+           "CREATE TABLE t_job (id text, txt text)")
+    df = read_tsv_dump(spark, str(dump))
+    n, jobs = spark_jobs(
+        lambda: PG.write_pg_copy(df, "t_job", pg, mode="staged")
+    )
+    assert n == 1000
+    assert len(jobs) == 1 and len(jobs[0]) == 1, jobs
+    assert _q(pg, "SELECT count(*) FROM t_job") == "1000"
+
+
+@pytest.mark.parametrize("parts, cap, tasks", [(20, 4, 4), (2, None, 2)])
+def test_copy_tasks_are_partitions_capped_by_num_partitions(
+    pg, spark, spark_jobs, parts, cap, tasks
+):
+    _q(pg, "DROP TABLE IF EXISTS t_cap; CREATE TABLE t_cap (id bigint)")
+    df = spark.range(0, 2000, numPartitions=parts)
+    n, jobs = spark_jobs(lambda: PG.write_pg_copy(
+        df, "t_cap", pg, mode="append", num_partitions=cap
+    ))
+    assert n == 2000
+    assert jobs == [[tasks]]
+    assert _q(pg, "SELECT count(*) FROM t_cap") == "2000"

@@ -7,10 +7,17 @@ drop-vs-abort, and empty input.
 
 from __future__ import annotations
 
+import gzip
+
 import pytest
+from pyspark.sql import functions as F
 
 from hivetomysql_spark.config import DumpConf, DumpMap
-from hivetomysql_spark.errors import MissingSourceFieldError, NoDataError
+from hivetomysql_spark.errors import (
+    MissingHeaderError,
+    MissingSourceFieldError,
+    NoDataError,
+)
 from hivetomysql_spark.pipeline import apply_mapping, run_pipeline, validate_mapping
 from hivetomysql_spark.sources import read_tsv_dump
 
@@ -141,3 +148,93 @@ def test_pipeline_observe_metrics_single_pass(spark, tmp_path):
     assert metrics["rows_out"] == 5
     assert metrics["nulls_name"] == 0
     assert metrics["nulls_ds"] == 0  # constant column never null
+
+
+def _inferred_dump(spark, path):
+    """The reference for :func:`read_tsv_dump`: the same CSV reader with
+    Spark's own header inference, then the same prefix strip and
+    header-echo filter."""
+    df = (
+        spark.read.option("sep", "\t")
+        .option("header", "true")
+        .option("nullValue", "NULL")
+        .option("inferSchema", "false")
+        .csv(path)
+    )
+    stripped = [c.split(".")[-1] for c in df.columns]
+    raw_first, first = df.columns[0], stripped[0]
+    return df.toDF(*stripped).where(
+        F.col(first).isNull()
+        | ((F.col(first) != F.lit(raw_first)) & (F.col(first) != F.lit(first)))
+    )
+
+
+def _write(path, text, newline="\n"):
+    path.parent.mkdir(parents=True, exist_ok=True)
+    data = text.replace("\n", newline).encode("utf-8")
+    path.write_bytes(gzip.compress(data) if path.suffix == ".gz" else data)
+    return str(path)
+
+
+def _dump_dir(spark, tmp_path):
+    """A dump directory as a Hadoop job leaves it: a part file with its
+    ``.crc`` checksum and ``_SUCCESS`` (here not empty, and sorting
+    before the parts), plus an empty reducer output that sorts first."""
+    d = tmp_path / "dump"
+    lines = TSV.splitlines() + ["7\tshare\t70\t7.5"]
+    rows = spark.createDataFrame([(v,) for v in lines], "value string")
+    rows.coalesce(1).write.text(str(d))
+    assert list(d.glob(".part-*.crc"))
+    (d / "._SUCCESS.crc").unlink()
+    _write(d / "_SUCCESS", "job_7\tdone\n")
+    _write(d / "part-0", "")
+    return str(d)
+
+
+def _dump_glob(spark, tmp_path):
+    _write(tmp_path / "g" / "a.tsv", TSV)
+    _write(tmp_path / "g" / "b.tsv", TSV)
+    _write(tmp_path / "g" / "notes.txt", "not\ta\tdump\n")
+    return str(tmp_path / "g" / "*.tsv")
+
+
+HEADER_CASES = {
+    "table_prefixes": lambda s, t: _write(t / "d.tsv", TSV),
+    "crlf": lambda s, t: _write(t / "d.tsv", TSV, newline="\r\n"),
+    "gzip": lambda s, t: _write(t / "d.tsv.gz", TSV),
+    "directory_with_markers": _dump_dir,
+    "glob": _dump_glob,
+    "non_ascii": lambda s, t: _write(
+        t / "d.tsv", "t.名前\tt.città\tt.😀\nå\tNULL\tx\nt.名前\tt.città\tt.😀\n"
+    ),
+    "duplicate_and_empty_fields": lambda s, t: _write(
+        t / "d.tsv", "t.a\tt.a\t\tNULL\tt.B\tb\tnull\n1\t2\t3\t4\t5\t6\t7\n"
+    ),
+    "leading_blank_lines": lambda s, t: _write(t / "d.tsv", "\n   \n" + TSV),
+    "quoted_header_field": lambda s, t: _write(t / "d.tsv", '"q.a"\tq.b\n1\t2\n'),
+}
+
+
+@pytest.mark.parametrize("case", sorted(HEADER_CASES))
+def test_tsv_reader_matches_spark_header_inference(spark, tmp_path, case):
+    path = HEADER_CASES[case](spark, tmp_path)
+    got = read_tsv_dump(spark, path)
+    want = _inferred_dump(spark, path)
+    assert got.columns == want.columns
+    assert got.count() > 0
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+def test_tsv_reader_zero_byte_file_is_missing_header(spark, tmp_path):
+    p = tmp_path / "empty.data"
+    p.write_bytes(b"")
+    with pytest.raises(MissingHeaderError) as ei:
+        read_tsv_dump(spark, str(p))
+    assert ei.value.exit_code == 9995
+
+
+def test_tsv_reader_starts_no_spark_job(spark, spark_jobs, tmp_path):
+    path = _dump_dir(spark, tmp_path)
+    df, jobs = spark_jobs(lambda: read_tsv_dump(spark, path))
+    assert jobs == []
+    assert df.count() == 4
