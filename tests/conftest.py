@@ -1,10 +1,36 @@
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 
 from hivetomysql_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
+SF_DIR_BIG = "/root/testdata/sf0.01"
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+
+
+def pytest_collection_modifyitems(config, items):
+    """The default run is the fast tier: ``slow`` tests are deselected
+    unless ``-m`` was given or their file was named on the command
+    line (``pytest tests/test_join_gate.py`` runs that gate)."""
+    if config.option.markexpr:
+        return
+    root = str(config.invocation_params.dir)
+    named = {
+        os.path.abspath(os.path.join(root, str(arg).split("::")[0]))
+        for arg in config.args
+    }
+    slow = [
+        item for item in items
+        if item.get_closest_marker("slow") and str(item.path) not in named
+    ]
+    if slow:
+        config.hook.pytest_deselected(items=slow)
+        drop = set(map(id, slow))
+        items[:] = [item for item in items if id(item) not in drop]
 
 
 @pytest.fixture(scope="session")
@@ -21,6 +47,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def registry_capture(spark):
+    """{sf_dir: {query: record}} — one tools/registry_capture.py pass
+    over the whole registry at sf0.001 and sf0.01, shared by the slow
+    audit gates (built on first request only)."""
+    sys.path.insert(0, TOOLS)
+    import registry_capture as RC
+
+    import __spark_entry__ as m
+
+    qmap = m.queries()
+    return {d: RC.capture(spark, d, qmap) for d in (SF_DIR, SF_DIR_BIG)}
 
 
 @pytest.fixture()

@@ -8,19 +8,19 @@ r10 audit (``tools/broadcast_audit.py``, SCALING.md round 10) found
 22 such frames (full customer/part tables, threshold-only hot-key
 sets, O(N/64) offset frames) and removed or bounded every one. This
 gate repeats the measurement on every pytest run at the cheap
-(sf0.001 → sf0.01) step: a spy on ``pyspark.sql.functions.broadcast``
-captures each hinted frame while all 475 plans build, counts it at
-both scales, and fails on any frame that grows more than 3× across
-the 10× data step AND is over 1000 rows at sf0.01 (tiny frames jump
+(sf0.001 → sf0.01) step: the shared registry capture
+(``tools/registry_capture.py``) spies on
+``pyspark.sql.functions.broadcast`` while every plan builds, counts
+each hinted frame at both scales, and fails on any frame that grows
+more than 3× across the 10× data step AND is over 1000 rows at sf0.01 (tiny frames jump
 ratios on saturation — e.g. the 64-row ranks offsets filling in —
 without being a memory risk).
 
 Known saturating frames are exempted with the bound that caps them;
 an exemption without a real cap is a bug in this table, not a pass.
 
-Expensive (~minutes: two plan-builds plus one count per hinted frame
-per scale), so it runs as one looping test like the plan-budget and
-window-bounds gates.
+Reads the session-scoped ``registry_capture`` fixture (one registry
+build per scale, shared by every slow gate).
 """
 
 from __future__ import annotations
@@ -34,6 +34,8 @@ pytestmark = pytest.mark.slow
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(ROOT, "tools"))
+
+from registry_capture import spy_lists  # noqa: E402
 
 SMALL = "/root/testdata/sf0.001"
 BIG = "/root/testdata/sf0.01"
@@ -57,14 +59,9 @@ SATURATING_OK = {
 }
 
 
-def test_no_data_sized_explicit_broadcasts(spark):
-    import broadcast_audit as B
-
-    import __spark_entry__ as m
-
-    names = sorted(m.queries())
-    a = B.capture_counts(spark, SMALL, names, verbose=False)
-    b = B.capture_counts(spark, BIG, names, verbose=False)
+def test_no_data_sized_explicit_broadcasts(registry_capture):
+    a = spy_lists(registry_capture[SMALL], "broadcast")
+    b = spy_lists(registry_capture[BIG], "broadcast")
 
     violations = []
     for name in sorted(set(a) & set(b)):

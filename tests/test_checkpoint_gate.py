@@ -20,17 +20,16 @@ checkpointed frame must therefore be one of:
   defect even in this class (that one had a single consumer and is
   now collapsed to a per-doc max before the sweep).
 
-The capture mechanism is shared with ``tools/checkpoint_audit.py``
-(spy on the concrete classic ``DataFrame.localCheckpoint`` — Spark 4
+The capture is the shared ``tools/registry_capture.py`` pass (spy on
+the concrete classic ``DataFrame.localCheckpoint`` — Spark 4
 dispatches through the subclass). Growth compares each query's MAX
 checkpointed frame across scales rather than call-by-call: adaptive
 fixpoints legitimately run different round counts per scale, so
 per-index alignment is meaningless for them (graph_bfs_distances ran
 24 rounds at sf0.01 and 6 at sf0.1 in the r11 audit).
 
-Expensive (~minutes: two plan-builds plus a count per checkpointed
-frame per scale), so it runs as one looping test like the broadcast
-and plan-budget gates.
+Reads the session-scoped ``registry_capture`` fixture (one registry
+build per scale, shared by every slow gate).
 """
 
 from __future__ import annotations
@@ -44,6 +43,8 @@ pytestmark = pytest.mark.slow
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(ROOT, "tools"))
+
+from registry_capture import spy_lists  # noqa: E402
 
 SMALL = "/root/testdata/sf0.001"
 BIG = "/root/testdata/sf0.01"
@@ -90,14 +91,9 @@ DATA_SIZED_BY_DESIGN = {
 }
 
 
-def test_no_unpriced_data_sized_checkpoints(spark):
-    import checkpoint_audit as C
-
-    import __spark_entry__ as m
-
-    names = sorted(m.queries())
-    a = C.capture(spark, SMALL, names, verbose=False)
-    b = C.capture(spark, BIG, names, verbose=False)
+def test_no_unpriced_data_sized_checkpoints(registry_capture):
+    a = spy_lists(registry_capture[SMALL], "checkpoint")
+    b = spy_lists(registry_capture[BIG], "checkpoint")
 
     violations = []
     for name in sorted(set(a) & set(b)):

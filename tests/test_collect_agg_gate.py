@@ -3,10 +3,10 @@ r11 audit frozen as a regression test).
 
 An array-building aggregate materializes its whole group in ONE
 aggregation buffer — the JVM cousin of the grouped-map pandas batch.
-The r11 audit (tools/collect_agg_audit.py) measured the max group
-size feeding all 25 collect-agg call sites at sf0.01/sf0.1: worst
-absolute 2,405 rows (a per-day Kalman series, calendar-bounded and
-FLAT across the 10x step); every site is domain-bounded (calendar
+The r11 audit (the collect-agg spy, now in tools/registry_capture.py)
+measured the max group size feeding all 25 collect-agg call sites at
+sf0.01/sf0.1: worst absolute 2,405 rows (a per-day Kalman series,
+calendar-bounded and FLAT across the 10x step); every site is domain-bounded (calendar
 days, 64 clusters, sessions per user) except the two registered
 classes below. This gate re-measures on every run so a future
 collect over a low-cardinality key on a fact table fails loudly.
@@ -27,6 +27,8 @@ pytestmark = pytest.mark.slow
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(ROOT, "tools"))
+
+from registry_capture import spy_lists  # noqa: E402
 
 SMALL = "/root/testdata/sf0.001"
 BIG = "/root/testdata/sf0.01"
@@ -52,14 +54,9 @@ DATA_SIZED_OK = {
 }
 
 
-def test_collect_agg_groups_bounded(spark):
-    import collect_agg_audit as C
-
-    import __spark_entry__ as m
-
-    names = sorted(m.queries())
-    a = C.capture(spark, SMALL, names, verbose=False)
-    b = C.capture(spark, BIG, names, verbose=False)
+def test_collect_agg_groups_bounded(registry_capture):
+    a = spy_lists(registry_capture[SMALL], "collect_agg")
+    b = spy_lists(registry_capture[BIG], "collect_agg")
 
     violations = []
     for name in sorted(set(a) & set(b)):

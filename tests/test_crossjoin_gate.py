@@ -11,16 +11,15 @@ crossJoin whose smaller side scales with data is O(N^2) work, which
 this repo permits only for the documented exact similarity verify
 tier (it prices the LSH tier and is capped by contract).
 
-Capture is shared with ``tools/crossjoin_audit.py`` (spy on the
-concrete classic ``DataFrame.crossJoin``; counts run at plan-build
-time, so the gate sweeps the full registry without executing query
-outputs). Scales: the cheap sf0.001 -> sf0.01 pair — the doc-tier
-fixtures are floored at 500 docs below sf0.01, which conveniently
+Capture is the shared ``tools/registry_capture.py`` pass (spy on
+the concrete classic ``DataFrame.crossJoin``; counts run at
+plan-build time, so the gate sweeps the full registry without
+executing query outputs). Scales: the cheap sf0.001 -> sf0.01 pair
+— the doc-tier fixtures are floored at 500 docs below sf0.01, which conveniently
 flattens the REGISTERED exact tier here while still catching a new
 unregistered data-sized side on every warehouse-tier table.
-Expensive (~minutes: two full-registry plan builds + two counts per
-crossJoin call), so it runs as one looping test like the checkpoint
-and plan-budget gates.
+Reads the session-scoped ``registry_capture`` fixture (one registry
+build per scale, shared by every slow gate).
 """
 
 from __future__ import annotations
@@ -34,6 +33,8 @@ pytestmark = pytest.mark.slow
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(ROOT, "tools"))
+
+from registry_capture import spy_lists  # noqa: E402
 
 SMALL = "/root/testdata/sf0.001"
 BIG = "/root/testdata/sf0.01"
@@ -52,14 +53,9 @@ DATA_SIZED_OK = {
 }
 
 
-def test_crossjoin_smaller_sides_bounded(spark):
-    import crossjoin_audit as C
-
-    import __spark_entry__ as m
-
-    names = sorted(m.queries())
-    a = C.capture(spark, SMALL, names, verbose=False)
-    b = C.capture(spark, BIG, names, verbose=False)
+def test_crossjoin_smaller_sides_bounded(registry_capture):
+    a = spy_lists(registry_capture[SMALL], "crossjoin")
+    b = spy_lists(registry_capture[BIG], "crossjoin")
 
     violations = []
     for name in sorted(set(a) & set(b)):

@@ -24,8 +24,9 @@ Bounds are grouped by what bounds them:
 
 A query not in the table growing a global window FAILS (enumeration
 check); a listed query whose measured input exceeds its bound FAILS
-with the name. Expensive (~minutes: one count job per window), so it
-runs as one looping test like the registry budget gate.
+with the name. Both tests read the session-scoped
+``registry_capture`` fixture (tools/registry_capture.py: the flag at
+sf0.001, the per-window input counts at sf0.01).
 """
 
 from __future__ import annotations
@@ -35,8 +36,6 @@ import pytest
 # the default (driver-verify) tier; run with -m "slow or not slow".
 pytestmark = pytest.mark.slow
 
-
-from hivetomysql_spark.plans import introspect as I
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -134,22 +133,20 @@ GLOBAL_WINDOW_BOUNDS: dict[str, int] = {
 }
 
 
-def test_global_window_enumeration_current(spark, sf_dir):
+def test_global_window_enumeration_current(registry_capture, sf_dir):
     """Every registry query with ANY unpartitioned Window must be
     listed in the bounds table (plan shapes are scale-independent, so
     enumeration runs at the cheap conftest fixture scale)."""
-    import __spark_entry__ as m
-
-    qmap = m.queries()
-    stale = sorted(set(GLOBAL_WINDOW_BOUNDS) - set(qmap))
+    cap = registry_capture[sf_dir]
+    stale = sorted(set(GLOBAL_WINDOW_BOUNDS) - set(cap))
     assert not stale, f"bounds table lists unregistered queries: {stale}"
     violations = []
-    for name in sorted(qmap):
-        try:
-            has_gw = bool(I.global_windows(qmap[name](spark, sf_dir)))
-        except Exception as exc:  # noqa: BLE001
-            violations.append(f"{name}: plan derivation failed: {exc!r}")
+    for name in sorted(cap):
+        err = cap[name]["error"] or cap[name]["plan_error"]
+        if err:
+            violations.append(f"{name}: plan derivation failed: {err}")
             continue
+        has_gw = cap[name]["global_windows"]
         if has_gw and name not in GLOBAL_WINDOW_BOUNDS:
             violations.append(
                 f"{name}: NEW global (unpartitioned) window — "
@@ -162,22 +159,19 @@ def test_global_window_enumeration_current(spark, sf_dir):
     )
 
 
-def test_global_window_input_row_bounds(spark):
+def test_global_window_input_row_bounds(registry_capture):
     """MEASURED input rows of every listed query's global windows at
     sf0.01 must stay within the frozen bound — the empirical check
     the shape gate cannot provide (see module docstring)."""
-    import __spark_entry__ as m
-
-    qmap = m.queries()
+    cap = registry_capture[SF_DIR]
     violations = []
     for name in sorted(GLOBAL_WINDOW_BOUNDS):
         bound = GLOBAL_WINDOW_BOUNDS[name]
-        try:
-            df = qmap[name](spark, SF_DIR)
-            counts = I.global_window_input_counts(df)
-        except Exception as exc:  # noqa: BLE001
-            violations.append(f"{name}: measurement failed: {exc!r}")
+        err = cap[name]["error"] or cap[name]["plan_error"]
+        if err:
+            violations.append(f"{name}: measurement failed: {err}")
             continue
+        counts = cap[name]["global_window_counts"]
         if not counts:
             # window vanished (plan improved) — harmless; the
             # enumeration test will force the table entry out when

@@ -27,6 +27,11 @@ import pytest
 # the default (driver-verify) tier; run with -m "slow or not slow".
 pytestmark = pytest.mark.slow
 
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
+))
+import registry_capture as RC  # noqa: E402
+
 
 # join keys whose cardinality grows with the data (verified by the
 # r11 measured audit) — a site keyed on ANY of these is scale-safe
@@ -49,51 +54,18 @@ SNAPSHOT = os.path.join(
 )
 
 
-def _walk_sites(spark, sf_dir: str):
-    """{(query, lkeys-tuple)} for every equi Join node — structural
-    only (reuses the audit's condition parser, no count jobs)."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(root, "tools"))
-    import join_key_audit as JK
-    import __spark_entry__ as entrymod
-
-    qmap = entrymod.queries()
-    sites = set()
-    for name in sorted(qmap):
-        df = qmap[name](spark, sf_dir)
-        stack = [df._jdf.queryExecution().optimizedPlan()]
-        while stack:
-            n = stack.pop()
-            if (
-                n.getClass().getSimpleName() == "Join"
-                and not n.condition().isEmpty()
-            ):
-                pairs, unparsed = JK._equi_pairs(
-                    n.condition().get(),
-                    JK._attr_positions(n.left()),
-                    JK._attr_positions(n.right()),
-                )
-                if pairs:
-                    sites.add((
-                        name,
-                        tuple(
-                            p["lsql"] if not p["lattr"] else p["ln"]
-                            for p in pairs
-                        ),
-                    ))
-                elif unparsed:
-                    # an equi condition the tree walk could not
-                    # attribute must surface, not vanish
-                    sites.add((name, ("<unparsed-equi-cond>",)))
-            ch = n.children()
-            for i in range(ch.size()):
-                stack.append(ch.apply(i))
-    return sites
+def _sites(cap) -> set:
+    """{(query, lkeys-tuple)} for every equi Join node in a registry
+    capture (tools/registry_capture.py — structural plan walk that
+    reuses the audit's condition parser, no count jobs)."""
+    failed = RC.failures(cap)
+    assert not failed, f"registry queries failed to build: {failed}"
+    return {(q, tuple(ks)) for q, r in cap.items() for ks in r["join_sites"]}
 
 
 @pytest.fixture(scope="module")
-def current_sites(spark):
-    return _walk_sites(spark, "/root/testdata/sf0.001")
+def current_sites(registry_capture):
+    return _sites(registry_capture["/root/testdata/sf0.001"])
 
 
 def test_every_join_site_audited_or_growing(current_sites):
@@ -127,13 +99,13 @@ if __name__ == "__main__":
     # refreeze: record every current site (the measured audit must be
     # clean first — this script only snapshots identity, not safety)
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as entrymod
     from hivetomysql_spark.session import get_spark
 
     spark = get_spark(app_name="join_gate_freeze")
     spark.sparkContext.setLogLevel("ERROR")
-    sites = sorted(
-        (q, list(ks)) for q, ks in _walk_sites(spark, "/root/testdata/sf0.001")
-    )
+    cap = RC.capture(spark, "/root/testdata/sf0.001", entrymod.queries())
+    sites = sorted((q, list(ks)) for q, ks in _sites(cap))
     with open(SNAPSHOT, "w") as fh:
         json.dump({"sites": sites}, fh, indent=1)
     print(f"froze {len(sites)} join sites -> {SNAPSHOT}")

@@ -43,14 +43,18 @@ A site passes if any of:
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 # r14 (verdict r13 #2): registry-wide measured audit — deselected from
 # the default (driver-verify) tier; run with -m "slow or not slow".
 pytestmark = pytest.mark.slow
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
-import __spark_entry__ as entrymod
-from hivetomysql_spark.plans import introspect as I
+from registry_capture import failures  # noqa: E402
 
 # Keys whose distinct-value count grows with the data (verified by
 # the r11 measured audit: groups grew ~10x across the sf0.01->sf0.1
@@ -104,20 +108,15 @@ ALLOWED: dict[tuple[str, tuple[str, ...]], str] = {
         "picks plain window; two-level above (ranks.py r13 census)",
 }
 
-QUERIES = sorted(entrymod.queries())
-
-
 @pytest.fixture(scope="module")
-def site_map(spark):
-    qmap = entrymod.queries()
-    out = {}
-    for name in QUERIES:
-        df = qmap[name](spark, "/root/testdata/sf0.001")
-        sites = I.partitioned_window_keys(df)
-        if sites:
-            wgl = I.partial_window_group_limits(df)
-            out[name] = (sites, wgl)
-    return out
+def site_map(registry_capture):
+    cap = registry_capture["/root/testdata/sf0.001"]
+    failed = failures(cap)
+    assert not failed, f"registry queries failed to build: {failed}"
+    return {
+        name: (r["window_sites"], r["window_limits"])
+        for name, r in cap.items() if r["window_sites"]
+    }
 
 
 def test_no_bounded_key_window_over_raw_data(site_map):
