@@ -54,7 +54,13 @@ class NoDataError(EngineError):
 
 
 def to_exit_code(exc: BaseException) -> int:
-    """Map any exception to the reference's exit-code protocol."""
+    """Map any exception to the reference's exit-code protocol.
+
+    A short row is found inside a Spark task, where ``read_tsv_dump``
+    fails it with ``raise_error('RowArityError: …')``; the job's error
+    reaches the driver as a Spark exception carrying that text."""
     if isinstance(exc, EngineError):
         return exc.exit_code
+    if f"{RowArityError.__name__}: " in str(exc):
+        return RowArityError.exit_code
     return 9999

@@ -21,9 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
-from hivetomysql_spark.errors import MissingHeaderError
+from hivetomysql_spark.errors import MissingHeaderError, RowArityError
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -116,45 +115,20 @@ def read_jdbc(
     return reader.load()
 
 
-def _is_hidden(name: str) -> bool:
-    # Spark's file index skips these names (``_SUCCESS``, ``.crc``)
-    return name.startswith(("_", "."))
-
-
-def _dump_files(fs, jvm, path: str) -> list:
-    """The files Spark's CSV source reads for ``path``, in path order:
-    each glob match that is a file, or the files directly inside a
-    matched directory, minus hidden names."""
-    files = []
-    for st in sorted(fs.globStatus(jvm.org.apache.hadoop.fs.Path(path)) or [],
-                     key=lambda s: s.getPath().toString()):
-        if st.isDirectory():
-            children = sorted(fs.listStatus(st.getPath()),
-                              key=lambda c: c.getPath().getName())
-            files += [c for c in children if c.isFile()
-                      and not _is_hidden(c.getPath().getName())]
-        elif not _is_hidden(st.getPath().getName()):
-            files.append(st)
-    return files
-
-
-def _header_line(spark: SparkSession, path: str) -> str | None:
-    """The first line that Spark's CSV schema inference would take as
-    the header: in the first file of ``path`` holding one, the first
-    line that is not empty once spaces are trimmed. Read on the driver
-    through the session's Hadoop ``FileSystem``, decompressing by file
-    extension like Spark's text reader (``.gz`` etc.). ``None`` when no
-    file has such a line."""
+def _header_line(spark: SparkSession, files: list[str]) -> str | None:
+    """The dump's header: in the first of ``files`` holding one, the
+    first line that is not empty once spaces are trimmed. Read on the
+    driver through the session's Hadoop ``FileSystem``, decompressing
+    by file extension like Spark's text reader (``.gz`` etc.).
+    ``None`` when no file has such a line."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     codecs = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-    for st in _dump_files(fs, jvm, path):
-        if st.getLen() == 0:
-            continue
-        stream = fs.open(st.getPath())
+    for f in files:
+        path = jvm.org.apache.hadoop.fs.Path(f)
+        stream = path.getFileSystem(conf).open(path)
         try:
-            codec = codecs.getCodec(st.getPath())
+            codec = codecs.getCodec(path)
             if codec is not None:
                 stream = codec.createInputStream(stream)
             # Hadoop's default line splitting (LF, CRLF or CR), as in
@@ -171,7 +145,7 @@ def _header_line(spark: SparkSession, path: str) -> str | None:
 
 
 def _header_names(tokens: list[str], case_sensitive: bool) -> list[str]:
-    """Column names Spark's CSV inference gives a header with
+    """Column names as Spark's CSV header inference gives them with
     ``nullValue=NULL``: an empty or ``NULL`` field becomes ``_c<i>``,
     a name occurring twice (case-insensitively unless
     ``case_sensitive``) gets its index appended."""
@@ -188,58 +162,54 @@ def _header_names(tokens: list[str], case_sensitive: bool) -> list[str]:
 def read_tsv_dump(spark: SparkSession, path: str) -> DataFrame:
     """Read a reference-native Hive TSV dump, all columns as strings.
 
-    Reproduces (citations into /root/reference/HiveToMysql.java):
+    Line by line, as the reference does (citations into its
+    HiveToMysql.java):
 
-    * tab separation + header line (366, 526-545)
-    * ``table.`` prefix stripped from header fields (532-545)
-    * literal ``NULL`` text ⇒ SQL NULL (443-446)
-    * mid-stream header echoes dropped (347-350, 402-405) — the hive
-      CLI sometimes re-prints the header; with a schema'd reader any
-      such line would otherwise surface as a data row, so we filter
-      rows where the first column equals its own header name.
+    * the header is the first line not blank once spaces are trimmed;
+      its fields, split on tabs, name the columns with any ``table.``
+      prefix stripped (526-545)
+    * a line equal to the header (a hive CLI header echo, 347-350,
+      402-405) or blank once spaces are trimmed is dropped
+    * every other line is split on tabs (366), each field kept as
+      written (an empty field stays ``''``, quotes stay), except that
+      literal ``NULL`` becomes SQL NULL (443-446); extra fields are
+      ignored
+    * a row lacking a field that is read fails the job with a
+      ``RowArityError:`` message (437-441; exit 9996 via
+      :func:`hivetomysql_spark.errors.to_exit_code`) — only the
+      columns a query references are checked, as in the reference
     * all-varchar model (README.md:17) — every column StringType.
 
-    The header is read on the driver, not by a Spark job: building
-    this plan starts no job. The CSV reader gets an all-string schema
-    named the way its own header inference would name it (so the
-    per-file header check still matches), then the names are
-    stripped. ``path`` may be a file, a directory or a glob; the
-    header comes from the first file in path order that has one, so
-    every file of one dump must share it. A header line holding a CSV
-    quote character, or no header line at all, leaves the naming (or
-    the error) to Spark's inference, which then runs one job.
+    ``path`` may be a file, a directory or a glob; Spark's file index
+    picks the files (skipping ``_SUCCESS``, ``.crc`` and the like) and
+    the header comes from the first of them in path order that has
+    one, so every file of one dump must share it. The header is read
+    on the driver: this function never starts a Spark job.
 
     Raises :class:`MissingHeaderError` (reference exit 9995) when the
     dump has no header line.
     """
-    reader = (
-        spark.read.option("sep", "\t")
-        .option("header", "true")
-        .option("nullValue", "NULL")
-    )
-    header = _header_line(spark, path)
-    if header is None or '"' in header:
-        df = reader.option("inferSchema", "false").csv(path)
-    else:
-        case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
-        names = _header_names(header.split("\t"), case_sensitive)
-        df = reader.schema(
-            StructType([StructField(n, StringType()) for n in names])
-        ).csv(path)
-    if not df.columns:
+    lines = spark.read.text(path)
+    header = _header_line(spark, sorted(lines.inputFiles()))
+    if header is None:
         raise MissingHeaderError(f"no header line in {path}")
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
     # strip "table." prefixes (HiveToMysql.java:532-545)
-    stripped = [c.split(".")[-1] for c in df.columns]
-    raw_first = df.columns[0]
-    df = df.toDF(*stripped)
-    # drop header-echo rows (HiveToMysql.java:347-350): a re-echoed
-    # header parses as a row whose first field is the header token.
-    first = stripped[0]
-    df = df.where(
-        F.col(first).isNull()
-        | ((F.col(first) != F.lit(raw_first)) & (F.col(first) != F.lit(first)))
-    )
-    return df
+    names = [
+        n.split(".")[-1]
+        for n in _header_names(header.split("\t"), case_sensitive)
+    ]
+    short = f"{RowArityError.__name__}: a row of {path} has no field"
+    p = F.col("p")
+    rows = lines.where(
+        (F.col("value") != F.lit(header)) & (F.trim("value") != F.lit(""))
+    ).select(F.split("value", "\t", -1).alias("p"))
+    return rows.select(*[
+        F.when(F.size(p) <= i, F.raise_error(F.lit(f"{short} {i + 1} ({n})")))
+        .otherwise(F.nullif(p[i], F.lit("NULL")))
+        .alias(n)
+        for i, n in enumerate(names)
+    ])
 
 
 def read_binary_files(

@@ -90,3 +90,21 @@ def test_cli_unknown_error_exit_9999(tmp_path):
     conf.write_text("source_format=bogus\n")
     (tmp_path / "dump.map").write_text(MAP_TEXT)
     assert run_cli(conf).returncode == 9999 % 256
+
+
+def test_cli_short_row_exit_9996(tmp_path):
+    """A row lacking a mapped field aborts with the reference's arity
+    code (HiveToMysql.java:437-441); a row lacking only unmapped
+    fields passes, as the reference only reads referenced ordinals.
+    The parquet sink is the job that reads the rows (``sink_format=none``
+    runs none: the empty-input check selects no column)."""
+    short = TSV + "4\tclick\n"  # no user_id, no value
+    conf = write_fixture(tmp_path, tsv=short)
+    proc = run_cli(conf)
+    assert proc.returncode == 9996 % 256, proc.stderr[-2000:]
+    assert "RowArityError: " in proc.stderr
+    conf = write_fixture(
+        tmp_path, map_text="etype=event_type\nds=$ds\n", tsv=short
+    )
+    proc = run_cli(conf)
+    assert proc.returncode == 0, proc.stderr[-2000:]

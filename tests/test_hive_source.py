@@ -67,11 +67,12 @@ def test_hive_partitioned_read_with_ds_pruning(tmp_path):
 
 def test_hivedump_writer_roundtrip(spark, tmp_path):
     """The engine EMITS the reference's dump format: write a frame
-    with NULLs through format('hivedump'), read it back through the
-    same format, and recover identical rows — interop in both
+    with NULLs through format('hivedump'), read it back through
+    read_tsv_dump, and recover identical rows — interop in both
     directions with the reference's staging files."""
     from pyspark.sql import Row
 
+    from hivetomysql_spark.sources import read_tsv_dump
     from hivetomysql_spark.sources.hivedump_datasource import (
         HiveDumpDataSource,
     )
@@ -88,9 +89,9 @@ def test_hivedump_writer_roundtrip(spark, tmp_path):
     df.write.format("hivedump").mode("overwrite").option(
         "path", out
     ).save()
-    back = (
-        spark.read.format("hivedump").option("path", out).load()
-    )
+    back = read_tsv_dump(spark, out)
+    assert back.columns == ["a", "b", "c"]
+    # the empty value comes back as '' (the reference splits on tabs)
     assert sorted(map(tuple, back.collect())) == sorted(
         map(tuple, df.collect())
     )
@@ -109,7 +110,8 @@ def test_hivedump_writer_roundtrip(spark, tmp_path):
 def test_hivedump_writer_rejects_tabs(spark, tmp_path):
     """The reference's line protocol has no escaping
     (HiveToMysql.java:366 splits blindly); the writer refuses values
-    it cannot represent instead of corrupting the file."""
+    it cannot represent instead of corrupting the file: a tab, and a
+    line break (LF or CR — the reader ends a line at either)."""
     import pytest as pt
 
     from hivetomysql_spark.sources.hivedump_datasource import (
@@ -117,20 +119,18 @@ def test_hivedump_writer_rejects_tabs(spark, tmp_path):
     )
 
     spark.dataSource.register(HiveDumpDataSource)
-    df = spark.createDataFrame([("a\tb",)], ["x"])
-    with pt.raises(Exception, match="tab|newline|hivedump"):
-        df.write.format("hivedump").mode("overwrite").option(
-            "path", str(tmp_path / "bad")
-        ).save()
+    for i, bad in enumerate(["a\tb", "a\nb", "a\rb"]):
+        df = spark.createDataFrame([(bad,)], ["x"])
+        with pt.raises(Exception, match="tab/newline/CR"):
+            df.write.format("hivedump").mode("overwrite").option(
+                "path", str(tmp_path / f"bad{i}")
+            ).save()
 
 
-def _read_hivedump(spark, path):
-    from hivetomysql_spark.sources.hivedump_datasource import (
-        HiveDumpDataSource,
-    )
+def _read_dump(spark, path):
+    from hivetomysql_spark.sources import read_tsv_dump
 
-    spark.dataSource.register(HiveDumpDataSource)
-    df = spark.read.format("hivedump").option("path", path).load()
+    df = read_tsv_dump(spark, path)
     return df.columns, sorted(map(tuple, df.collect()), key=repr)
 
 
@@ -143,21 +143,29 @@ def test_hivedump_reads_crlf_dump_like_lf(spark, tmp_path):
     (tmp_path / "lf.dump").write_bytes(text.encode())
     (tmp_path / "crlf.dump").write_bytes(text.replace("\n", "\r\n").encode())
     want = (["a", "b"], [("1", "x"), ("2", None)])
-    assert _read_hivedump(spark, str(tmp_path / "lf.dump")) == want
-    assert _read_hivedump(spark, str(tmp_path / "crlf.dump")) == want
+    assert _read_dump(spark, str(tmp_path / "lf.dump")) == want
+    assert _read_dump(spark, str(tmp_path / "crlf.dump")) == want
 
 
 def test_hivedump_directory_skips_hadoop_marker_files(spark, tmp_path):
     """``_SUCCESS`` sorts before ``part-*``; it and other ``_``/``.``
     marker files are not dumps and must not be taken for the header
-    file or read as data."""
+    file or read as data. The ``.crc`` beside a part file must be its
+    real checksum: Hadoop's local file system verifies it on read."""
     d = tmp_path / "dump"
     d.mkdir()
     (d / "_SUCCESS").write_bytes(b"")
     (d / "_committer.json").write_text('{"job": "x"}\n')
-    (d / ".part-00000.dump.crc").write_bytes(b"crc\x00junk")
-    (d / "part-00000.dump").write_text("t.a\tt.b\n1\tx\n")
+    (d / ".notes").write_bytes(b"crc\x00junk")
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        spark._jsc.hadoopConfiguration()
+    )
+    out = fs.create(jvm.org.apache.hadoop.fs.Path(str(d / "part-00000.dump")))
+    out.write(bytearray(b"t.a\tt.b\n1\tx\n"))
+    out.close()
+    assert (d / ".part-00000.dump.crc").exists()
     (d / "part-00001.dump").write_text("t.a\tt.b\n2\ty\n")
-    assert _read_hivedump(spark, str(d)) == (
+    assert _read_dump(spark, str(d)) == (
         ["a", "b"], [("1", "x"), ("2", "y")]
     )

@@ -151,9 +151,11 @@ def test_pipeline_observe_metrics_single_pass(spark, tmp_path):
 
 
 def _inferred_dump(spark, path):
-    """The reference for :func:`read_tsv_dump`: the same CSV reader with
-    Spark's own header inference, then the same prefix strip and
-    header-echo filter."""
+    """A cross-check for :func:`read_tsv_dump` on dumps with no empty
+    and no quoted field: Spark's CSV reader with its own header
+    inference, then the prefix strip and a header-echo filter. The two
+    must agree on the column names and the rows; the reference's
+    line rules themselves are pinned in ``test_tsv_dump_oracle.py``."""
     df = (
         spark.read.option("sep", "\t")
         .option("header", "true")
@@ -211,7 +213,6 @@ HEADER_CASES = {
         t / "d.tsv", "t.a\tt.a\t\tNULL\tt.B\tb\tnull\n1\t2\t3\t4\t5\t6\t7\n"
     ),
     "leading_blank_lines": lambda s, t: _write(t / "d.tsv", "\n   \n" + TSV),
-    "quoted_header_field": lambda s, t: _write(t / "d.tsv", '"q.a"\tq.b\n1\t2\n'),
 }
 
 
@@ -238,3 +239,18 @@ def test_tsv_reader_starts_no_spark_job(spark, spark_jobs, tmp_path):
     df, jobs = spark_jobs(lambda: read_tsv_dump(spark, path))
     assert jobs == []
     assert df.count() == 4
+    # a quoted header field is a name like any other
+    quoted = _write(tmp_path / "q.tsv", '"q.a"\tq.b\n1\t2\n')
+    df, jobs = spark_jobs(lambda: read_tsv_dump(spark, quoted))
+    assert jobs == []
+    assert df.columns == ['a"', "b"]
+    # no header line: 9995 before any job
+    blank = _write(tmp_path / "blank.tsv", "\n   \n")
+
+    def no_header():
+        with pytest.raises(MissingHeaderError) as ei:
+            read_tsv_dump(spark, blank)
+        return ei.value.exit_code
+
+    code, jobs = spark_jobs(no_header)
+    assert (code, jobs) == (9995, [])

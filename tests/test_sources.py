@@ -118,11 +118,11 @@ def test_xml_roundtrip(spark, sf_dir, tmp_path):
     assert got == orig and len(got) > 0
 
 
-def test_hivedump_python_datasource(spark, tmp_path):
-    """The reference's TSV dump format as a Spark 4 Python
-    DataSource: table-prefix stripping, NULL literal, mid-file header
-    echo filtering, per-file partitions."""
-    from hivetomysql_spark.sources.hivedump_datasource import HiveDumpDataSource
+def test_tsv_dump_directory_of_dumps(spark, tmp_path):
+    """A directory of the reference's TSV dumps reads as one table:
+    table-prefix stripping, NULL literal, mid-file and per-file header
+    echoes dropped."""
+    from hivetomysql_spark.sources import read_tsv_dump
 
     d = tmp_path / "dumps"
     d.mkdir()
@@ -131,25 +131,27 @@ def test_hivedump_python_datasource(spark, tmp_path):
         f"{header}\n1\tclick\t10\n{header}\n2\tview\tNULL\n"
     )
     (d / "part2.data").write_text(f"{header}\n3\tbuy\t7\n")
-    spark.dataSource.register(HiveDumpDataSource)
-    df = spark.read.format("hivedump").load(str(d))
+    df = read_tsv_dump(spark, str(d))
     assert df.columns == ["event_id", "etype", "val"]
-    assert df.rdd.getNumPartitions() == 2
     rows = {(r.event_id, r.etype, r.val) for r in df.collect()}
     assert rows == {("1", "click", "10"), ("2", "view", None), ("3", "buy", "7")}
 
 
-def test_hivedump_datasource_arity_error(spark, tmp_path):
-    """Arity mismatches are fatal, mirroring reference exit 9996."""
+def test_tsv_dump_short_row_raises_row_arity_error(spark, tmp_path):
+    """A row lacking a field that is read is fatal, mirroring reference
+    exit 9996; a query that reads only fields the row has passes."""
     import pytest
 
-    from hivetomysql_spark.sources.hivedump_datasource import HiveDumpDataSource
+    from hivetomysql_spark.errors import RowArityError, to_exit_code
+    from hivetomysql_spark.sources import read_tsv_dump
 
     f = tmp_path / "bad.data"
     f.write_text("a\tb\n1\t2\n3\n")
-    spark.dataSource.register(HiveDumpDataSource)
-    with pytest.raises(Exception, match="expected 2 fields|ArityError|PythonException"):
-        spark.read.format("hivedump").load(str(f)).collect()
+    df = read_tsv_dump(spark, str(f))
+    with pytest.raises(Exception, match="RowArityError: ") as ei:
+        df.collect()
+    assert to_exit_code(ei.value) == RowArityError.exit_code == 9996
+    assert sorted(r.a for r in df.select("a").collect()) == ["1", "3"]
 
 
 def test_csv_corrupt_record_modes(spark, tmp_path):
