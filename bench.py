@@ -20,7 +20,9 @@ regressions; only a timing sample catches a constant-factor blowup).
 
 Each query plan is fully executed via the noop sink (forces every
 exchange/aggregate without materializing rows on the driver — the
-honest way to time a distributed plan).
+honest way to time a distributed plan). The noop consume, the min-of-N
+loop, the warm-up, the host probes and the attempt loop below are the
+shared timing core in ``tools/timing.py``.
 
 The payload also carries ``calib``: two fixed CPU-bound probes (a
 single-core Python SHA-256 loop and a 32-way JVM codegen sum over
@@ -50,12 +52,20 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hivetomysql_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
+from tools.timing import (  # noqa: E402,F401  (calibrate: bench.calibrate)
+    MAX_ATTEMPTS,
+    best_of,
+    calibrate,
+    consume,
+    normalize_by_probe,
+    probed,
+    probed_pass,
+)
 
 HEADLINE = [
     "parity_mapping",
@@ -125,8 +135,11 @@ HEADLINE = [
 ROTATION_SIZE = 60
 
 
-def rotation_slice(all_names) -> tuple[int, list[str]]:
-    """Deterministic per-round window over the non-headline registry.
+def rotation_slice(
+    all_names, size: int = ROTATION_SIZE
+) -> tuple[int, list[str]]:
+    """Deterministic per-round ``size``-query window over the
+    non-headline registry.
 
     The round index comes from the highest ``BENCH_r{N}.json`` the
     driver has recorded beside this script — stable within a round,
@@ -142,139 +155,44 @@ def rotation_slice(all_names) -> tuple[int, list[str]]:
     tail = sorted(set(all_names) - set(HEADLINE))
     if not tail:
         return idx, []
-    start = (idx * ROTATION_SIZE) % len(tail)
+    start = (idx * size) % len(tail)
     return idx, [
-        tail[(start + i) % len(tail)]
-        for i in range(min(ROTATION_SIZE, len(tail)))
+        tail[(start + i) % len(tail)] for i in range(min(size, len(tail)))
     ]
-
-
-def calibrate(spark) -> dict[str, float]:
-    """Fixed CPU-bound host-speed probes (see module docstring).
-
-    Both workloads are deterministic and data-independent, so their
-    wall time moves only with the host: ``py_sha_sec`` tracks
-    single-core Python/hash throughput (what a Pandas-UDF worker
-    feels), ``jvm_sum_sec`` tracks the 32-way JVM codegen path (what
-    a whole-stage-codegen scan feels).  To compare query times across
-    rounds, divide each side's per-query seconds by its calib value
-    first — a plan regression moves the normalized number, a slower
-    container moves both numerator and denominator together.
-    """
-    import hashlib  # noqa: PLC0415
-
-    def sha_probe() -> float:
-        buf = b"spark-graft-calibration-block-0123456789abcdef" * 32
-        t0 = time.perf_counter()
-        h = hashlib.sha256()
-        for _ in range(20000):
-            h.update(buf)
-        # fold the digest into a throwaway int so the loop can't be
-        # elided and the probe stays deterministic
-        int.from_bytes(h.digest()[:8], "big")
-        return time.perf_counter() - t0
-
-    def jvm_probe() -> float:
-        t0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "sum(id * 3 + 7) AS s"
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    return {
-        "py_sha_sec": round(min(sha_probe() for _ in range(3)), 4),
-        "jvm_sum_sec": round(min(jvm_probe() for _ in range(3)), 4),
-    }
-
-
-def consume(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-# Validity gate (r13): a record whose start/end probes disagree more
-# than this is contention-crossed — the run straddled a co-tenant
-# phase and its per-query numbers mix two host speeds. Rather than
-# committing such a record and explaining it in prose (r11 and r12
-# both had to), the harness re-runs the timing pass up to
-# MAX_ATTEMPTS times and keeps the cleanest attempt; only if every
-# attempt fails does the record ship, and then it carries
-# "contention_crossed": true so no reader can mistake it for a
-# comparable number.
-PROBE_AGREEMENT = 1.5
-MAX_ATTEMPTS = 3
-
-
-def probe_disagreement(calib: dict) -> float:
-    """max over both probes of max(start/end, end/start)."""
-    worst = 1.0
-    for k in ("py_sha_sec", "jvm_sum_sec"):
-        a = calib["start"].get(k)
-        b = calib["end"].get(k)
-        if a and b:
-            worst = max(worst, a / b, b / a)
-    return worst
-
-
-def normalize_by_probe(
-    timings: dict[str, float], calib: dict
-) -> tuple[float, dict[str, float] | None]:
-    """Probe-normalized per-query seconds (r14, verdict r13 #5), so
-    cross-round comparisons stop being hostage to which contention
-    window a record was taken in. The normalizer is the geometric
-    mean of the record's OWN start/end JVM probes (the codegen-scan
-    probe — what a whole-stage query feels); a plan regression moves
-    the normalized number, a slower container moves numerator and
-    denominator together. A probe that reads 0 (clock resolution, a
-    failed probe) leaves nothing to normalize by: the map is ``None``
-    and the record still ships after its full timing pass."""
-    jvm_norm = (
-        calib["start"]["jvm_sum_sec"] * calib["end"]["jvm_sum_sec"]
-    ) ** 0.5
-    if jvm_norm <= 0:
-        return jvm_norm, None
-    return jvm_norm, {k: round(v / jvm_norm, 2) for k, v in timings.items()}
 
 
 def timing_pass(spark, qmap, sf_dir: str, sf: float) -> dict:
     """One full protocol pass: start probe, headline min-of-3,
     rotation min-of-2, end probe. Returns the record payload with
     its own ``probe_disagreement`` stamped in."""
-    calib_start = calibrate(spark)
 
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = qmap[name]
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            consume(fn(spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+    def best(name: str, reps: int) -> float:
+        return round(best_of(lambda: consume(qmap[name](spark, sf_dir)), reps), 3)
 
-    rot_idx, rot_names = rotation_slice(qmap)
-    rotation: dict[str, float] = {}
-    for name in rot_names:
-        fn = qmap[name]
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            consume(fn(spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        rotation[name] = round(best, 3)
+    def body() -> dict:
+        rot_idx, rot_names = rotation_slice(qmap)
+        return {
+            "queries": {name: best(name, 3) for name in HEADLINE},
+            "rotation": {
+                "index": rot_idx,
+                "queries": {name: best(name, 2) for name in rot_names},
+            },
+        }
 
-    calib = {"start": calib_start, "end": calibrate(spark)}
-    jvm_norm, normalized = normalize_by_probe(timings, calib)
+    p = probed_pass(spark, body)
+    timings = p["queries"]
+    jvm_norm, normalized = normalize_by_probe(timings, p["calib"])
     return {
         "metric": "headline_queries_total_sec",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "rotation": {"index": rot_idx, "queries": rotation},
-        "calib": calib,
+        "rotation": p["rotation"],
+        "calib": p["calib"],
         "jvm_probe_geomean": round(jvm_norm, 4),
         "queries_normalized": normalized,
-        "probe_disagreement": round(probe_disagreement(calib), 3),
+        "probe_disagreement": p["probe_disagreement"],
     }
 
 
@@ -285,40 +203,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     qmap = entrymod.queries()
-    # JVM warmup across the code paths the headline queries exercise:
-    # whole-stage codegen + janino compile, parquet vectorized reader,
-    # hash join, window exec, higher-order functions + explode. Each
-    # query still codegens its own plan — this warms the *compilers*,
-    # not the queries (none of the warmup plans appear below).
-    from pyspark.sql import Window as W  # noqa: PLC0415
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    consume(spark.range(1000).selectExpr("sum(id) as s"))
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(10000)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
-    consume(
-        li.join(docs, F.lit(True)).groupBy("l_returnflag").count()
-    )
-    toks = docs.select("doc_id", F.split(F.lower("text"), r"\s+").alias("w"))
-    grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.size("w") - 2, F.lit(1))),
-                lambda i: F.concat_ws(" ", F.slice("w", i, 3)),
-            )
-        ).alias("g"),
-    )
-    consume(grams.groupBy("g").count())
-    consume(
-        li.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("l_returnflag").orderBy("l_orderkey")
-            ),
-        ).where("rn <= 3")
-    )
-
     # Every headline query runs three times and reports the min: one
     # execution is at the mercy of transient co-tenant load
     # (page-cache eviction, CPU steal), and a shared box routinely
@@ -329,27 +213,12 @@ def main() -> None:
     # quantity a capacity plan uses; the extra pass over the full
     # headline set costs ~60 s per bench run.
     #
-    # Validity loop: see PROBE_AGREEMENT above. The rotation re-runs
-    # with each attempt on purpose — the kept record's rotation
-    # numbers must come from the same window as its probes, or the
-    # record is internally inconsistent.
-    attempts: list[dict] = []
-    for attempt in range(1, MAX_ATTEMPTS + 1):
-        payload = timing_pass(spark, qmap, sf_dir, sf)
-        payload["attempt"] = attempt
-        attempts.append(payload)
-        if payload["probe_disagreement"] <= PROBE_AGREEMENT:
-            break
-        print(
-            f"# attempt {attempt}: probes disagree "
-            f"{payload['probe_disagreement']}x (> {PROBE_AGREEMENT}) — "
-            "contention-crossed, re-running",
-            file=sys.stderr,
-        )
-    payload = min(attempts, key=lambda p: p["probe_disagreement"])
-    payload["attempts"] = len(attempts)
-    payload["contention_crossed"] = (
-        payload["probe_disagreement"] > PROBE_AGREEMENT
+    # Validity loop: see PROBE_AGREEMENT in tools/timing.py. The
+    # rotation re-runs with each attempt on purpose — the kept
+    # record's rotation numbers must come from the same window as its
+    # probes, or the record is internally inconsistent.
+    payload = probed(
+        spark, sf_dir, lambda: timing_pass(spark, qmap, sf_dir, sf), MAX_ATTEMPTS
     )
     payload["cpus"] = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     print(json.dumps(payload))

@@ -44,18 +44,10 @@ WINDOW_SIZE = 50
 
 def window(all_names) -> tuple[int, list[str]]:
     """Deterministic per-round window over the non-headline registry
-    — same round-index derivation as bench.rotation_slice, separate
-    window size so the differential and timing rotations cover the
-    tail on independent schedules."""
-    idx, _ = bench.rotation_slice(all_names)
-    tail = sorted(set(all_names) - set(bench.HEADLINE))
-    if not tail:
-        return idx, []
-    start = (idx * WINDOW_SIZE) % len(tail)
-    return idx, [
-        tail[(start + i) % len(tail)]
-        for i in range(min(WINDOW_SIZE, len(tail)))
-    ]
+    — bench.rotation_slice with a separate window size, so the
+    differential and timing rotations cover the tail on independent
+    schedules."""
+    return bench.rotation_slice(all_names, size=WINDOW_SIZE)
 
 
 def main() -> int:

@@ -22,7 +22,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,6 +30,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from hivetomysql_spark.session import get_spark  # noqa: E402
 from hivetomysql_spark.queries import graph_suite as G  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
+from tools.timing import timed  # noqa: E402
 
 SF10 = ".derived/sf10"
 SF100 = ".derived/sf100"
@@ -65,13 +65,11 @@ def main() -> int:
         ("graph_kcore", "kcore"),
     ):
         for sf_dir, decade in ((SF10, "sf10"), (SF100, "sf100")):
-            t0 = time.perf_counter()
-            row = qmap[name](spark, sf_dir).collect()[0].asDict()
-            dt = round(time.perf_counter() - t0, 2)
+            row, sec = timed(lambda: qmap[name](spark, sf_dir).collect()[0].asDict())
             print(json.dumps({
                 "query": name,
                 "decade": decade,
-                "sec": dt,
+                "sec": round(sec, 2),
                 "stats": G.LAST_RUN_STATS.get(stats_key, {}),
                 "result": row,
             }), flush=True)

@@ -5,9 +5,11 @@ live).
 
 Times each named query with the noop sink, min-of-R, on one session,
 optionally flipping RUNTIME SQL confs between an A pass and a B pass
-(interleaved A,B,A,B,... so host drift hits both arms). Static JVM
-confs (spark.io.compression.codec) cannot flip in-session — pass them
-via EXTRA_CONF for a whole-process arm and compare across two runs
+(``tools.timing.ab``: interleaved A,B then B,A, ... so host drift and
+the first-run cost hit both arms; the confs are restored afterwards,
+also when a query raises). Static JVM confs
+(spark.io.compression.codec) cannot flip in-session — pass them via
+EXTRA_CONF for a whole-process arm and compare across two runs
 instead.
 
 Usage:
@@ -25,16 +27,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hivetomysql_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
-
-
-def consume(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+from tools.timing import ab, consume, warm_up  # noqa: E402
 
 
 def main() -> int:
@@ -45,41 +43,26 @@ def main() -> int:
     for kv in filter(None, os.environ.get("EXTRA_CONF", "").split(";")):
         k, v = kv.split("=", 1)
         extra[k] = v
-    ab = {}
+    ab_conf = {}
     for kv in filter(None, os.environ.get("AB_CONF", "").split(";")):
         k, v = kv.split("=", 1)
-        ab[k] = v
+        ab_conf[k] = v
     spark = get_spark(app_name="heavy_ab", extra_conf=extra or None)
     spark.sparkContext.setLogLevel("ERROR")
     qmap = entrymod.queries()
-    # compiler warmup (same rationale as bench.py)
-    consume(spark.range(100000).selectExpr("sum(id*3+7) as s"))
+    warm_up(spark, sf_dir)
 
-    defaults = {k: spark.conf.get(k, None) for k in ab}
+    arms = {"A": {}, "B": ab_conf} if ab_conf else {"A": {}}
     results: dict[str, dict[str, float]] = {}
     for name in names:
-        fn = qmap[name]
-        arms = {"A": float("inf")} if not ab else {"A": float("inf"), "B": float("inf")}
-        for _ in range(reps):
-            for arm in arms:
-                if ab:
-                    for k, v in (ab if arm == "B" else defaults).items():
-                        if v is None:
-                            spark.conf.unset(k)
-                        else:
-                            spark.conf.set(k, v)
-                spark.sparkContext.setJobDescription(f"{name}[{arm}]")
-                t0 = time.perf_counter()
-                consume(fn(spark, sf_dir))
-                arms[arm] = min(arms[arm], time.perf_counter() - t0)
-        spark.sparkContext.setJobDescription(None)
-        results[name] = {a: round(t, 3) for a, t in arms.items()}
+        best = ab(spark, arms, lambda: consume(qmap[name](spark, sf_dir)), reps, name)
+        results[name] = {a: round(t, 3) for a, t in best.items()}
         line = f"{name}: A={results[name]['A']}"
-        if ab:
+        if ab_conf:
             line += f"  B={results[name]['B']}  B/A={results[name]['B']/max(results[name]['A'],1e-9):.2f}"
         print(line, flush=True)
     print("JSON " + json.dumps({"sf_dir": sf_dir, "reps": reps,
-                                "ab_conf": ab, "extra_conf": extra,
+                                "ab_conf": ab_conf, "extra_conf": extra,
                                 "results": results}))
     return 0
 

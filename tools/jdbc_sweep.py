@@ -12,17 +12,18 @@ Usage: python tools/jdbc_sweep.py [n_rows]
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
-import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from hivetomysql_spark.config import DumpConf  # noqa: E402
 from hivetomysql_spark.session import get_spark  # noqa: E402
 from hivetomysql_spark.sinks.jdbc import write_jdbc  # noqa: E402
+from tools.timing import timed  # noqa: E402
 
 PARTS = [1, 4, 8, 16]
 BATCH = [100, 1000, 4000]
@@ -50,15 +51,13 @@ def main() -> int:
             url = f"jdbc:derby:{dbdir};create=true"
             conf = DumpConf.from_text("mysql_table=sweep_t\nds=20240101\n")
             d = df.repartition(parts)
-            t0 = time.time()
-            write_jdbc(
+            _, dt = timed(lambda: write_jdbc(
                 d, conf, None, url=url, url_params=None, ident_quote='"',
                 batch_size=batch, max_connections=parts,
                 create_table_column_types=(
                     "val VARCHAR(30), ds VARCHAR(20), version VARCHAR(20)"
                 ),
-            )
-            dt = time.time() - t0
+            ))
             results.append((parts, batch, dt, n / dt))
             print(f"{parts:>5} {batch:>6} {dt:>7.2f} {n / dt:>9.0f}")
             shutil.rmtree(dbdir, ignore_errors=True)

@@ -13,9 +13,12 @@ holding the row volume fixed — the missing measurement for sizing
 Usage: python tools/pg_copy_sweep.py [rows] [streams...]
        (defaults: 2_000_000 rows; streams 1 2 4 8 16)
 
-Starts/stops its own server under a temp dir (root + a ``postgres``
-system user required, same gating as tests/test_pg_copy_sink.py);
-prints a JSON line per cell and a summary table.
+Starts/stops its own server under a temp dir with
+``perfbench.pgserver.ScratchPostgres`` (fsync=off,
+synchronous_commit=off; run as root it needs a ``postgres`` system
+user); prints a JSON line per cell and a summary table. Each cell is
+min-of-2 (``tools.timing.best_of``); a rep's span covers the TRUNCATE
+of the previous rep's rows (one psql call) and the COPY load.
 """
 
 from __future__ import annotations
@@ -23,24 +26,15 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hivetomysql_spark.session import get_spark  # noqa: E402
 from hivetomysql_spark.sinks import pg_copy as PG  # noqa: E402
-
-PORT = "55434"
-
-
-def su_pg(cmd: str) -> subprocess.CompletedProcess:
-    return subprocess.run(
-        ["su", "postgres", "-s", "/bin/bash", "-c", cmd],
-        capture_output=True, text=True, timeout=300,
-    )
+from perfbench.pgserver import ScratchPostgres  # noqa: E402
+from tools.timing import best_of  # noqa: E402
 
 
 def main() -> int:
@@ -50,21 +44,10 @@ def main() -> int:
         print("SKIP: no PostgreSQL binaries")
         return 0
     base = tempfile.mkdtemp(prefix="pgsweep")
-    os.chmod(base, 0o755)
-    shutil.chown(base, user="postgres")
-    data = os.path.join(base, "data")
+    server = ScratchPostgres(base)
     try:
-        r = su_pg(f"initdb -D {data} -E UTF8 --no-sync")
-        assert r.returncode == 0, r.stderr[-300:]
-        r = su_pg(
-            f"pg_ctl -D {data} -o '-p {PORT} -k {base} "
-            "-c listen_addresses=\"\" -c fsync=off "
-            "-c synchronous_commit=off -c full_page_writes=off "
-            "-c max_wal_size=4GB' "
-            f"-l {base}/log -w start"
-        )
-        assert r.returncode == 0, r.stderr[-300:]
-        args = ["-h", base, "-p", PORT, "-U", "postgres", "-d", "postgres"]
+        server.start()
+        args = server.psql_args
 
         spark = get_spark(app_name="pg_copy_sweep")
         spark.sparkContext.setLogLevel("ERROR")
@@ -81,6 +64,13 @@ def main() -> int:
         ).cache()
         df.count()  # materialize so the sweep times ONLY the sink
 
+        def load(n: int) -> None:
+            PG.run_psql(args, "TRUNCATE sweep_t")
+            wrote = PG.write_pg_copy(
+                df, "sweep_t", args, mode="append", num_partitions=n
+            )
+            assert wrote == rows, (wrote, rows)
+
         results = {}
         for n in streams:
             PG.run_psql(
@@ -89,16 +79,7 @@ def main() -> int:
                 "CREATE UNLOGGED TABLE sweep_t "
                 "(id bigint, k bigint, v float8, s text)",
             )
-            best = float("inf")
-            for _ in range(2):
-                PG.run_psql(args, "TRUNCATE sweep_t")
-                t0 = time.perf_counter()
-                wrote = PG.write_pg_copy(
-                    df, "sweep_t", args, mode="append", num_partitions=n
-                )
-                dt = time.perf_counter() - t0
-                assert wrote == rows, (wrote, rows)
-                best = min(best, dt)
+            best = best_of(lambda: load(n), 2)
             got = PG.run_psql(args, "SELECT count(*) FROM sweep_t").strip()
             assert got == str(rows), got
             results[n] = round(best, 2)
@@ -112,7 +93,7 @@ def main() -> int:
             print(f"{n:>7}  {results[n]:<6}  {base_t / results[n]:.2f}x")
         return 0
     finally:
-        su_pg(f"pg_ctl -D {data} -m immediate stop")
+        server.stop()
         shutil.rmtree(base, ignore_errors=True)
 
 

@@ -20,9 +20,13 @@ comparison therefore ignores sub-300 ms queries (where scheduler
 noise dominates) and re-measures flagged queries min-of-3 before
 reporting them, so what it prints is worth investigating.  Rounds
 also land on containers of very different speed, so the sweep
-records the ``bench.calibrate`` host probes and scales the baseline
-by the JVM-probe ratio before computing drift — a uniformly slower
-host cancels out instead of flagging the whole registry.
+records the ``tools.timing.calibrate`` host probes — taken after the
+shared compiler warm-up (``tools.timing.warm_up``), at the start and
+end of the sweep, with their ``probe_disagreement`` and
+``contention_crossed`` (> ``PROBE_AGREEMENT``) stamped into the
+record — and scales the baseline by the start JVM-probe ratio before
+computing drift, so a uniformly slower host cancels out instead of
+flagging the whole registry.
 """
 
 from __future__ import annotations
@@ -31,21 +35,15 @@ import argparse
 import json
 import os
 import sys
-import time
+from time import perf_counter
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hivetomysql_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
-from bench import calibrate  # noqa: E402  (host-speed probes)
+from tools.timing import best_of, consume, probed, probed_pass, timed  # noqa: E402
 
 FLOOR_SEC = 0.3  # below this, scheduler noise dominates single runs
-
-
-def run_once(qmap, name, spark, sf_dir) -> float:
-    t = time.time()
-    qmap[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.time() - t
 
 
 def main() -> None:
@@ -70,7 +68,29 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qmap = entrymod.queries()
 
-    calib = calibrate(spark)
+    def run(name):
+        return lambda: consume(qmap[name](spark, args.sf_dir))
+
+    def sweep() -> dict:
+        times: dict[str, float] = {}
+        errs: dict[str, str] = {}
+        for i, name in enumerate(sorted(qmap)):
+            try:
+                times[name] = round(timed(run(name))[1], 3)
+            except Exception as e:  # noqa: BLE001 - record and continue
+                errs[name] = f"{type(e).__name__}: {e}"[:300]
+            if (i + 1) % 50 == 0:
+                print(f"  ... {i + 1}/{len(qmap)} ({perf_counter() - t0:.0f}s)",
+                      flush=True)
+        return {"queries": times, "errors": errs}
+
+    # shared compiler warm-up, then start probe / sweep / end probe.
+    # One attempt: a contention-crossed sweep is stamped as such
+    # rather than re-run, which would double an ~8 min tool.
+    t0 = perf_counter()
+    rec = probed(spark, args.sf_dir, lambda: probed_pass(spark, sweep), 1)
+    times, errs, calib = rec["queries"], rec["errors"], rec["calib"]["start"]
+
     # host-speed normalization: queries are predominantly JVM-side,
     # so scale the baseline's times by the JVM probe ratio before
     # computing drift — a uniformly slower container then cancels
@@ -81,27 +101,6 @@ def main() -> None:
         print(f"host-speed scale vs baseline: {host_scale:.2f}x "
               f"(jvm probe {baseline['calib']['jvm_sum_sec']}s -> "
               f"{calib['jvm_sum_sec']}s)")
-
-    # JIT/codegen warm-up so the first alphabetical queries don't
-    # absorb the whole JVM warm-up cost; failures are ignored here —
-    # the main loop records them per-query and keeps sweeping
-    for name in list(qmap)[:3]:
-        try:
-            run_once(qmap, name, spark, args.sf_dir)
-        except Exception:  # noqa: BLE001
-            pass
-
-    times: dict[str, float] = {}
-    errs: dict[str, str] = {}
-    t0 = time.time()
-    for i, name in enumerate(sorted(qmap)):
-        try:
-            times[name] = round(run_once(qmap, name, spark, args.sf_dir), 3)
-        except Exception as e:  # noqa: BLE001 - record and continue
-            errs[name] = f"{type(e).__name__}: {e}"[:300]
-        if (i + 1) % 50 == 0:
-            print(f"  ... {i + 1}/{len(qmap)} ({time.time() - t0:.0f}s)",
-                  flush=True)
 
     flagged = []
     if baseline:
@@ -116,8 +115,7 @@ def main() -> None:
             ratio = sec / old_scaled if old_scaled else float("inf")
             if ratio > args.ratio or ratio < 1.0 / args.ratio:
                 # re-measure min-of-3 before crying wolf
-                best = min(run_once(qmap, name, spark, args.sf_dir)
-                           for _ in range(3))
+                best = best_of(run(name), 3)
                 ratio = best / old_scaled if old_scaled else float("inf")
                 times[name] = round(best, 3)
                 if ratio > args.ratio or ratio < 1.0 / args.ratio:
@@ -136,13 +134,15 @@ def main() -> None:
         "n_queries": len(times),
         "total_sec": total,
         "calib": calib,
-        "calib_end": calibrate(spark),
+        "calib_end": rec["calib"]["end"],
+        "probe_disagreement": rec["probe_disagreement"],
+        "contention_crossed": rec["contention_crossed"],
         "queries": times,
         "errors": errs,
     }
     with open(args.out, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
-    print(f"swept {len(times)} queries in {time.time() - t0:.0f}s "
+    print(f"swept {len(times)} queries in {perf_counter() - t0:.0f}s "
           f"(sum of query time {total}s) -> {args.out}")
     if errs:
         print(f"ERRORS ({len(errs)}):")

@@ -14,12 +14,13 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from hivetomysql_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
+from tools.timing import consume, timed  # noqa: E402
 
 SF_DIRS = [
     ("0.001", "/root/testdata/sf0.001"),
@@ -28,13 +29,13 @@ SF_DIRS = [
 ]
 # third 10x step: derived data (tools/make_sfup.py), scaling-only —
 # correctness stays on the driver's own fixtures
-_SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", ".derived/sf1")
+_SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", f"{ROOT}/.derived/sf1")
 if os.path.isdir(_SF1):
     SF_DIRS.append(("1", _SF1))
 # fourth 10x step (60M lineitem / 500k docs / 10M events), heavy-tier
 # only: derive with `python tools/make_sfup.py 10 .derived/sf1
 # .derived/sf10` (verdict r8 #5)
-_SF10 = os.environ.get("SPARK_GRAFT_SF10_DIR", ".derived/sf10")
+_SF10 = os.environ.get("SPARK_GRAFT_SF10_DIR", f"{ROOT}/.derived/sf10")
 if os.path.isdir(_SF10):
     SF_DIRS.append(("10", _SF10))
 
@@ -54,30 +55,25 @@ DEFAULT = [
 
 def main() -> None:
     names = sys.argv[1:] or DEFAULT
-    unknown = [n for n in names if n not in entrymod.queries()]
+    qmap = entrymod.queries()
+    unknown = [n for n in names if n not in qmap]
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
     spark = get_spark(app_name="scalecheck")
     spark.sparkContext.setLogLevel("ERROR")
-    qmap = entrymod.queries()
     # codegen warm-up at the smallest sf
     for name in names:
-        qmap[name](spark, SF_DIRS[0][1]).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        consume(qmap[name](spark, SF_DIRS[0][1]))
     header = f"{'query':28s}" + "".join(f"  sf{sf:>5s}" for sf, _ in SF_DIRS)
     ratios_hdr = "".join(
         f"  ratio{i}{i+1}" for i in range(len(SF_DIRS) - 1)
     )
     print(header + " " + ratios_hdr)
     for name in names:
-        times = []
-        for _, sf_dir in SF_DIRS:
-            t = time.time()
-            qmap[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            times.append(time.time() - t)
+        times = [
+            timed(lambda: consume(qmap[name](spark, sf_dir)))[1]
+            for _, sf_dir in SF_DIRS
+        ]
         ratios = [times[i + 1] / times[i] for i in range(len(times) - 1)]
         print(
             f"{name:28s}"
