@@ -9,7 +9,7 @@ DataFrame plan. What we keep is its *observable contract*:
 * missing-source-field ⇒ warn+drop or abort 9997 depending on
   ``error_if_src_field_not_exsits`` (HiveToMysql.java:309-332)
 * empty input ⇒ abort 9998 or success depending on
-  ``error_if_none_data`` (HiveToMysql.java:200-207)
+  ``error_if_none_data``, never a write (HiveToMysql.java:200-207)
 * output column order = map-file order (HiveToMysql.java:143)
 * delete-before-insert idempotency keyed on the constant columns
   (HiveToMysql.java:270-282) — implemented in sinks.jdbc.
@@ -105,15 +105,21 @@ def run_pipeline(
         df, mapping, error_if_missing=conf.error_if_src_field_not_exsits
     )
     mapped = apply_mapping(df, mapping)
-    if conf.error_if_none_data and mapped.isEmpty():
-        # reference exit 9998 (HiveToMysql.java:200-207)
+    writes = sink is not None and not conf.skip_sql_to_target
+    # the reference stops before its write stage on empty input either
+    # way: exit 9998, or success with the target untouched
+    # (HiveToMysql.java:200-207)
+    if (conf.error_if_none_data or writes) and mapped.isEmpty():
+        if not conf.error_if_none_data:
+            log.info("no data rows; target left untouched")
+            return mapped
         src = (
             f"{conf.hive_db}.{conf.hive_table}"
             if conf.hive_db or conf.hive_table
             else conf.raw.get("source_path", "<source>")
         )
         raise NoDataError(f"no data for {src} ds={conf.ds}")
-    if sink is not None and not conf.skip_sql_to_target:
+    if writes:
         if conf.mode == "test":
             # dry-run: log the plan instead of executing
             # (reference mode=test, HiveToMysql.java:127,560-564)

@@ -15,6 +15,11 @@ here is chosen to also hold on a multi-executor cluster:
   zip archives: with the archives on ``sys.path`` every Python task
   re-reads ~27k zip entries in ``importlib.invalidate_caches()``
   (0.14-0.47 s of CPU per task, before any user code).
+* No Python call sites in the DataFrame query context
+  (``spark.python.sql.dataFrameDebugging.enabled=false``): with it on,
+  every ``functions.*`` call and ``Column`` method walks the Python
+  stack and sets a JVM origin, about 1 ms per call on the driver.
+  Pass the conf back on through ``extra_conf`` to debug a query.
 """
 
 from __future__ import annotations
@@ -128,6 +133,7 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "hivetomysql_spark.worker_daemon")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Arrow batch rows, parameterized (r14, guide §4.2): the decode
     # grid at derived sf10 (multimodal_features, ~16k-row partitions)

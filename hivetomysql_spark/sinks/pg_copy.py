@@ -47,10 +47,22 @@ no pandas conversion), and ``pyarrow.compute`` kernels cast, escape,
 NULL-mark and tab-join whole columns, so the COPY ``text`` block
 handed to psql's stdin is the joined array's value buffer — no
 Python work per row or per value.
+
+Every psql start goes through :func:`psql_command`. On Debian-family
+hosts ``psql`` on ``PATH`` is postgresql-common's Perl ``pg_wrapper``,
+which costs ~30 ms per start before it execs the real client; for a
+connection that names its host, the wrapper's choice is fixed (the
+newest installed client, ``PGSYSCONFDIR`` defaulted), so the sink
+makes that choice itself, once per process, on the host that runs
+psql.
 """
 
 from __future__ import annotations
 
+import functools
+import os
+import re
+import shutil
 import subprocess
 from typing import TYPE_CHECKING, Iterable, Iterator
 
@@ -63,6 +75,11 @@ if TYPE_CHECKING:
     import pandas as pd
 
 DEFAULT_MAX_COPY_STREAMS = 16  # same rationale as the JDBC sink cap
+
+# postgresql-common's layout: clients under <root>/<version>/bin, the
+# wrapper's default client config directory
+PG_WRAPPER_BINROOT = "/usr/lib/postgresql"
+PG_WRAPPER_CONFDIR = "/etc/postgresql-common"
 
 # COPY text-format metacharacters (PostgreSQL docs, "COPY" / text
 # format): backslash first, then delimiter/newline/carriage return
@@ -151,15 +168,67 @@ def copy_text_block(pdf: pd.DataFrame) -> bytes:
     return copy_text_batch(pa.RecordBatch.from_pandas(pdf, preserve_index=False))
 
 
+@functools.cache
+def _wrapped_psql() -> str | None:
+    """The client ``pg_wrapper`` runs for psql when the wrapper is
+    what ``psql`` on ``PATH`` resolves to, else ``None``: the newest
+    ``<binroot>/<version>/bin/psql`` in numeric version order
+    (pg_wrapper(1): psql always uses the newest installed binary)."""
+    found = shutil.which("psql")
+    if found is None or os.path.basename(os.path.realpath(found)) != "pg_wrapper":
+        return None
+    try:
+        entries = os.listdir(PG_WRAPPER_BINROOT)
+    except OSError:
+        return None
+    versions = sorted(
+        (tuple(int(p) for p in v.split(".")), v)
+        for v in entries
+        if re.fullmatch(r"\d+(\.\d+)?", v)
+        and os.access(os.path.join(PG_WRAPPER_BINROOT, v, "bin", "psql"), os.X_OK)
+    )
+    if not versions:
+        return None
+    return os.path.join(PG_WRAPPER_BINROOT, versions[-1][1], "bin", "psql")
+
+
+def _names_host(args: list[str]) -> bool:
+    """pg_wrapper's own test for an explicit host on the command line
+    (it stops at ``--``); a ``--cluster`` argument picks the client
+    from the cluster's version instead, so it counts as no host."""
+    if "--" in args:
+        args = args[: args.index("--")]
+    if any(a.startswith("--cluster") for a in args):
+        return False
+    return any(re.match(r"--host\b", a) or re.fullmatch(r"-\w*h\w*", a) for a in args)
+
+
+def psql_command(args: list[str]) -> tuple[list[str], dict[str, str] | None]:
+    """The argv and environment (``None`` = inherit) that run
+    ``psql *args``. When ``psql`` is Debian's ``pg_wrapper`` and the
+    args name a host, this is the binary and environment the wrapper
+    would exec, without the Perl start; otherwise plain ``psql``."""
+    direct = _wrapped_psql() if _names_host(args) else None
+    if direct is None:
+        return ["psql", *args], None
+    env = None
+    if "PGSYSCONFDIR" not in os.environ:
+        env = {**os.environ, "PGSYSCONFDIR": PG_WRAPPER_CONFDIR}
+    return [direct, *args], env
+
+
 def run_psql(psql_args: list[str], sql: str, stdin: bytes | None = None) -> str:
     """Driver/task-side psql invocation — ``ON_ERROR_STOP`` so a
     server-side error fails the task loudly instead of scrolling by
     (the reference inspects only the process exit code too,
     HiveToMysql.java:550-567, but ships without ON_ERROR_STOP's
     equivalent and can half-apply a script)."""
+    argv, env = psql_command(
+        [*psql_args, "-v", "ON_ERROR_STOP=1", "-X", "-q", "-A", "-t", "-c", sql]
+    )
     proc = subprocess.run(
-        ["psql", *psql_args, "-v", "ON_ERROR_STOP=1", "-X", "-q",
-         "-A", "-t", "-c", sql],
+        argv,
+        env=env,
         input=stdin,
         capture_output=True,
         timeout=3600,
@@ -181,7 +250,7 @@ def _copy_partitions(
     collected rows (no aggregate, so no second stage)."""
     cols_sql = ", ".join(_quote_ident(c) for c in df.columns)
     copy_sql = f"COPY {table} ({cols_sql}) FROM STDIN"
-    args = list(psql_args)
+    args = [*psql_args, "-v", "ON_ERROR_STOP=1", "-X", "-q", "-c", copy_sql]
 
     def sink(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         proc = None
@@ -194,9 +263,12 @@ def _copy_partitions(
                 # the task before any psql is started
                 block = copy_text_batch(batch)
                 if proc is None:
+                    # resolved in the task's own process: executors
+                    # may run on hosts laid out unlike the driver's
+                    argv, env = psql_command(args)
                     proc = subprocess.Popen(
-                        ["psql", *args, "-v", "ON_ERROR_STOP=1", "-X",
-                         "-q", "-c", copy_sql],
+                        argv,
+                        env=env,
                         stdin=subprocess.PIPE,
                         stderr=subprocess.PIPE,
                     )

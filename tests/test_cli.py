@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
 
 TSV = (
     "events.event_id\tevents.event_type\tevents.user_id\tevents.value\n"
@@ -23,7 +26,7 @@ def run_cli(conf_path):
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=REPO,
     )
 
 

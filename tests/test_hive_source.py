@@ -12,6 +12,9 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
 
 SCRIPT = r"""
 import sys
@@ -59,7 +62,7 @@ def test_hive_partitioned_read_with_ds_pruning(tmp_path):
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "HIVE_SOURCE_OK" in proc.stdout

@@ -81,6 +81,65 @@ def _q(pg_args, sql: str) -> str:
 
 
 @pytest.fixture()
+def fake_pg_wrapper(tmp_path, monkeypatch):
+    """A Debian-style layout under ``tmp_path``: ``bin/psql`` links to
+    a file named ``pg_wrapper``; clients 9.6, 15 and 16 are installed.
+    Yields a function that points ``PATH`` at a ``psql``."""
+    share = tmp_path / "share"
+    share.mkdir()
+    (share / "pg_wrapper").write_text("#!/bin/sh\n")
+    root = tmp_path / "lib" / "postgresql"
+    for v in ("9.6", "15", "16"):
+        (root / v / "bin").mkdir(parents=True)
+        (root / v / "bin" / "psql").write_text("#!/bin/sh\n")
+    for f in [share / "pg_wrapper", *root.glob("*/bin/psql")]:
+        f.chmod(0o755)
+    monkeypatch.setattr(PG, "PG_WRAPPER_BINROOT", str(root))
+    monkeypatch.delenv("PGSYSCONFDIR", raising=False)
+
+    def on_path(target):
+        bindir = tmp_path / "bin"
+        bindir.mkdir(exist_ok=True)
+        (bindir / "psql").symlink_to(target)
+        monkeypatch.setenv("PATH", str(bindir))
+        PG._wrapped_psql.cache_clear()
+        return root
+
+    yield on_path
+    PG._wrapped_psql.cache_clear()
+
+
+def test_wrapper_resolves_to_the_numerically_newest_client(fake_pg_wrapper, tmp_path):
+    root = fake_pg_wrapper(tmp_path / "share" / "pg_wrapper")
+    argv, env = PG.psql_command(["-h", "/tmp/sock", "-p", "5432", "-c", "SELECT 1"])
+    assert argv == [str(root / "16" / "bin" / "psql"), "-h", "/tmp/sock",
+                    "-p", "5432", "-c", "SELECT 1"]
+    assert env["PGSYSCONFDIR"] == PG.PG_WRAPPER_CONFDIR
+    assert PG.psql_command(["--host=/tmp/sock"])[0][0] == argv[0]
+
+
+def test_wrapper_is_kept_when_no_host_is_named(fake_pg_wrapper, tmp_path):
+    fake_pg_wrapper(tmp_path / "share" / "pg_wrapper")
+    for args in (["-p", "5432", "-d", "postgres"],
+                 ["-h", "/tmp/sock", "--cluster", "15/main"]):
+        assert PG.psql_command(args) == (["psql", *args], None)
+
+
+def test_a_psql_that_is_not_the_wrapper_is_used_as_is(fake_pg_wrapper, tmp_path):
+    fake_pg_wrapper(tmp_path / "lib" / "postgresql" / "15" / "bin" / "psql")
+    args = ["-h", "/tmp/sock"]
+    assert PG.psql_command(args) == (["psql", *args], None)
+
+
+def test_a_caller_set_pgsysconfdir_is_kept(fake_pg_wrapper, tmp_path, monkeypatch):
+    fake_pg_wrapper(tmp_path / "share" / "pg_wrapper")
+    monkeypatch.setenv("PGSYSCONFDIR", "/etc/custom-pg")
+    argv, env = PG.psql_command(["-h", "/tmp/sock"])
+    assert argv[0].endswith("/16/bin/psql")
+    assert (env or os.environ)["PGSYSCONFDIR"] == "/etc/custom-pg"
+
+
+@pytest.fixture()
 def tricky_df(spark):
     from pyspark.sql import functions as F
 

@@ -107,6 +107,25 @@ def test_empty_input_ok_when_not_flagged(spark, tmp_path):
     assert out.count() == 0
 
 
+def test_empty_input_never_reaches_the_sink_when_not_flagged(spark, tmp_path):
+    """The reference returns before its write stage on empty input
+    whatever ``error_if_none_data`` says: a staged sink must not swap
+    an empty table over the target."""
+    p = tmp_path / "empty.data"
+    p.write_text("events.event_id\tevents.event_type\tevents.user_id\tevents.value\n")
+    conf, mapping = _conf_map()
+    assert not conf.error_if_none_data
+    calls = []
+    metrics = {}
+    out = run_pipeline(
+        read_tsv_dump(spark, str(p)), conf, mapping,
+        sink=lambda df, c, m: calls.append(df), metrics_out=metrics,
+    )
+    assert calls == []
+    assert metrics == {}
+    assert out.columns == ["etype", "uid", "amount", "ds", "version"]
+
+
 def test_hll_sketch_estimate_close_to_exact(spark, sf_dir):
     """Merged per-partition HLL sketches must estimate the global
     distinct count within DataSketches' published error (~2.5% at
