@@ -1,7 +1,3 @@
-from hivetomysql_spark.sinks.jdbc import (  # noqa: F401
-    build_delete_statement,
-    delete_before_insert,
-    write_jdbc,
-)
+from hivetomysql_spark.sinks.jdbc import build_delete_statement, write_jdbc  # noqa: F401
 from hivetomysql_spark.sinks.files import write_csv, write_parquet  # noqa: F401
 from hivetomysql_spark.sinks.pg_copy import write_pg_copy  # noqa: F401

@@ -1,4 +1,4 @@
-"""JDBC (MySQL) sink with idempotent partition-scoped overwrite.
+"""JDBC (MySQL) sink: a staged load swapped in by one transaction.
 
 The reference loads via generated multi-row INSERT text piped to the
 mysql CLI, 100 rows per statement (HiveToMysql.java:338-377, 352), and
@@ -10,15 +10,14 @@ Spark's JDBC writer subsumes the INSERT generation (``batchsize``
 batched prepared statements, executed in parallel from every
 partition's task — vs the reference's single-threaded pipe). But
 Spark has no partition-scoped JDBC overwrite: ``mode("overwrite")``
-truncates or drops the whole table. So the delete-before-insert is a
-driver-side pre-action: one parameterized DELETE over a plain JDBC
-connection, then an append-mode distributed write. Delete+append is
-not atomic — neither is the reference (its DELETE and INSERT are two
-separate mysql-CLI statements). :func:`write_jdbc_staged` (r12)
-closes that window: the distributed write lands in ``tbl__staging``
-and ONE driver-side transaction swaps the partition in
-(delete+insert-select+commit), so readers never observe the gap and
-a mid-load failure leaves the target untouched.
+truncates or drops the whole table. So :func:`write_jdbc` — the one
+load path — lands the distributed write in a staging table of its
+own, then ONE driver-side transaction runs the reference's delete
+(when ``delete_before_dump`` is set) and an ``INSERT ... SELECT``
+from staging. The reference's DELETE and INSERT are two separate
+mysql-CLI statements with a visible gap between them; here readers
+see the old rows or the new ones, and a failed load leaves the target
+untouched.
 
 Scale notes (100 TB / 1000-executor design):
 
@@ -29,12 +28,19 @@ Scale notes (100 TB / 1000-executor design):
 * ``rewriteBatchedStatements=true`` in the URL turns MySQL's batched
   prepared statements into true multi-row INSERTs — the wire-level
   equivalent of the reference's 100-rows-per-INSERT, ~10× throughput.
+* The swap transaction is O(loaded rows) of server-side I/O — fine for
+  the ds-grain partition loads this pipeline ships (the reference's
+  unit of work). For multi-TB targets prefer a partitioned target
+  table and EXCHANGE PARTITION; same staging shape.
 """
 
 from __future__ import annotations
 
 import logging
+import uuid
+from contextlib import contextmanager
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 
 from hivetomysql_spark.config import DumpConf, DumpMap
@@ -69,35 +75,27 @@ def build_delete_statement(
     return sql, params
 
 
-def delete_before_insert(
-    spark,
-    conf: DumpConf,
-    mapping: DumpMap,
-    url: str | None = None,
-    ident_quote: str = "`",
-) -> None:
-    """Driver-side pre-delete via the JVM's DriverManager.
-
-    Uses the same JDBC driver the writer uses; runs once on the
-    driver before the distributed append.
-    """
-    sql, params = build_delete_statement(
-        conf.mysql_table, mapping.constant_fields, ident_quote=ident_quote
-    )
-    log.info("pre-delete: %s params=%s", sql, params)
-    jvm = spark._jvm
-    conn = jvm.java.sql.DriverManager.getConnection(
-        url or conf.jdbc_url, conf.mysql_user, conf.mysql_password
+@contextmanager
+def _connection(spark, url: str, conf: DumpConf):
+    """A driver-side connection through the JVM's DriverManager (the
+    JDBC driver the writer uses), closed on exit."""
+    conn = spark._jvm.java.sql.DriverManager.getConnection(
+        url, conf.mysql_user, conf.mysql_password
     )
     try:
-        stmt = conn.prepareStatement(sql)
-        for i, value in enumerate(params, start=1):
-            stmt.setString(i, value)
-        deleted = stmt.executeUpdate()
-        log.info("pre-delete removed %d rows", deleted)
-        stmt.close()
+        yield conn
     finally:
         conn.close()
+
+
+def _update(conn, sql: str, params=()) -> int:
+    stmt = conn.prepareStatement(sql)
+    try:
+        for i, value in enumerate(params, start=1):
+            stmt.setString(i, value)
+        return stmt.executeUpdate()
+    finally:
+        stmt.close()
 
 
 def write_jdbc(
@@ -112,146 +110,83 @@ def write_jdbc(
     ident_quote: str = "`",
     create_table_column_types: str | None = None,
 ) -> None:
-    """Append ``df`` into the MySQL target, optionally pre-deleting.
+    """Load ``df`` into ``conf.mysql_table`` atomically.
 
-    ``delete_before_dump`` + constant columns ⇒ idempotent re-runs:
-    running the pipeline twice leaves the target in the same state as
-    running it once (reference README.md:22-24).
+    1. A missing target is created with Spark's dialect DDL
+       (``create_table_column_types`` picks explicit column types, e.g.
+       VARCHAR instead of Derby's CLOB, which is not ``=``-comparable,
+       or MySQL's TEXT); an existing one is left as it is.
+    2. The distributed writer loads ``df``, coalesced to at most
+       ``max_connections`` tasks, into ``{table}__staging_<8 hex>``,
+       a table unique to this load, so two loads into one target never
+       share staging rows. Staging takes the dialect's default types:
+       Spark binds a NULL with the dialect's null type, which a
+       narrower typed column may refuse (Derby's VARCHAR takes no CLOB
+       NULL), while the server's ``INSERT ... SELECT`` casts it.
+    3. One driver transaction runs the reference's ``DELETE`` keyed on
+       the mapping's constant columns — only when
+       ``delete_before_dump`` is set; otherwise the load appends — and
+       ``INSERT INTO target SELECT ... FROM staging``, then commits.
+       Re-runs with ``delete_before_dump`` are idempotent (reference
+       README.md:22-24); a failure anywhere before the commit leaves
+       the target as it was.
+    4. The staging table is dropped, on success and on failure.
+
+    The load needs ``CREATE TABLE`` and ``DROP TABLE`` in the target's
+    schema; without them it fails at the staging ``CREATE``, before any
+    target row is touched.
 
     ``url``/``url_params``/``ident_quote`` default to the reference's
-    MySQL target; the Derby integration test overrides them (ANSI
+    MySQL target; the Derby integration tests override them (ANSI
     quotes, no MySQL URL params) — the write path is otherwise
     identical.
     """
-    if conf.delete_before_dump and mapping is not None:
-        delete_before_insert(
-            df.sparkSession, conf, mapping, url=url, ident_quote=ident_quote
-        )
-    out = df
-    if df.rdd.getNumPartitions() > max_connections:
-        out = df.coalesce(max_connections)
-    base_url = url or conf.jdbc_url
-    url = base_url + (f"?{url_params}" if url_params else "")
-    writer = (
-        out.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", conf.mysql_table)
-        .option("user", conf.mysql_user)
-        .option("password", conf.mysql_password)
-        .option("batchsize", str(batch_size))
-        .option("isolationLevel", isolation_level)
-    )
-    if create_table_column_types:
-        # explicit DDL types when the writer creates the table —
-        # e.g. VARCHAR instead of Derby's default CLOB (CLOB is not
-        # '='-comparable, which would break the pre-delete) or
-        # MySQL's TEXT
-        writer = writer.option("createTableColumnTypes", create_table_column_types)
-    writer.mode("append").save()
-
-
-def write_jdbc_staged(
-    df: DataFrame,
-    conf: DumpConf,
-    mapping: DumpMap | None = None,
-    batch_size: int = DEFAULT_BATCH_SIZE,
-    max_connections: int = DEFAULT_MAX_WRITE_CONNECTIONS,
-    isolation_level: str = "READ_COMMITTED",
-    url: str | None = None,
-    url_params: str | None = "rewriteBatchedStatements=true",
-    ident_quote: str = "`",
-    create_table_column_types: str | None = None,
-) -> None:
-    """Atomic partition overwrite via a staging table — the path that
-    EXCEEDS the reference (and plain :func:`write_jdbc`, which both
-    leave a visible rows-deleted-but-not-yet-inserted window on
-    failure or mid-load reads; documented at the top of this module).
-
-    1. The distributed writer loads ``df`` into ``{table}__staging``
-       (mode=overwrite: scratch table, dropped and recreated per run)
-       — all the heavy parallel INSERT traffic targets the staging
-       table, invisible to readers. A failure here leaves the TARGET
-       untouched: re-run and nothing was lost.
-    2. One driver-side transaction then does
-       ``DELETE FROM target WHERE <constants>; INSERT INTO target
-       SELECT <cols> FROM staging; COMMIT`` — server-side data
-       movement, no second trip over the wire, and readers at
-       READ_COMMITTED see the old partition or the new one, never
-       the gap. A failure between the two statements rolls back.
-    3. The staging table is dropped best-effort (next run overwrites
-       it anyway).
-
-    Scale note: the swap transaction is O(partition rows) of
-    server-side I/O inside one transaction — fine for the ds-grain
-    partition loads this pipeline ships (the reference's unit of
-    work). For multi-TB targets prefer a partitioned target table
-    and EXCHANGE PARTITION; same staging shape.
-    """
     spark = df.sparkSession
-    q = ident_quote
-    staging = f"{conf.mysql_table}__staging"
+    table = conf.mysql_table
+    staging = f"{table}__staging_{uuid.uuid4().hex[:8]}"
     base_url = url or conf.jdbc_url
-    wire_url = base_url + (f"?{url_params}" if url_params else "")
-    out = df
-    if df.rdd.getNumPartitions() > max_connections:
-        out = df.coalesce(max_connections)
-    writer = (
-        out.write.format("jdbc")
-        .option("url", wire_url)
-        .option("dbtable", staging)
-        .option("user", conf.mysql_user)
-        .option("password", conf.mysql_password)
-        .option("batchsize", str(batch_size))
-        .option("isolationLevel", isolation_level)
-    )
-    if create_table_column_types:
-        writer = writer.option(
-            "createTableColumnTypes", create_table_column_types
-        )
-    writer.mode("overwrite").save()
+    writer_url = base_url + (f"?{url_params}" if url_params else "")
 
+    def append(frame: DataFrame, dbtable: str, column_types: str | None = None) -> None:
+        writer = frame.write.format("jdbc").options(
+            url=writer_url,
+            dbtable=dbtable,
+            user=conf.mysql_user,
+            password=conf.mysql_password,
+            batchsize=str(batch_size),
+            isolationLevel=isolation_level,
+        )
+        if column_types:
+            writer = writer.option("createTableColumnTypes", column_types)
+        writer.mode("append").save()
+
+    append(df.limit(0), table, create_table_column_types)
+
+    q = ident_quote
     cols = ", ".join(f"{q}{c}{q}" for c in df.columns)
-    delete_sql, params = build_delete_statement(
-        conf.mysql_table,
-        mapping.constant_fields if (
-            conf.delete_before_dump and mapping is not None
-        ) else {},
-        ident_quote=ident_quote,
-    )
-    insert_sql = (
-        f"INSERT INTO {conf.mysql_table} ({cols}) "
-        f"SELECT {cols} FROM {staging}"
-    )
-    jvm = spark._jvm
-    conn = jvm.java.sql.DriverManager.getConnection(
-        base_url, conf.mysql_user, conf.mysql_password
-    )
     try:
-        conn.setAutoCommit(False)
-        try:
-            stmt = conn.prepareStatement(delete_sql)
-            for i, value in enumerate(params, start=1):
-                stmt.setString(i, value)
-            deleted = stmt.executeUpdate()
-            stmt.close()
-            st2 = conn.createStatement()
-            inserted = st2.executeUpdate(insert_sql)
-            st2.close()
-            conn.commit()
-            log.info(
-                "staged swap: -%d +%d rows in one transaction",
-                deleted, inserted,
-            )
-        except Exception:
-            conn.rollback()
-            raise
-        finally:
-            conn.setAutoCommit(True)
-        try:
-            st3 = conn.createStatement()
-            st3.executeUpdate(f"DROP TABLE {staging}")
-            st3.close()
-        except Exception as exc:  # noqa: BLE001 - scratch cleanup only
-            log.info("staging drop skipped: %s", exc)
+        # coalesce never adds partitions: a frame at or below the cap
+        # keeps its own, and planning needs no partition-count probe
+        append(df.coalesce(max_connections), staging)
+        with _connection(spark, base_url, conf) as conn:
+            conn.setAutoCommit(False)
+            try:
+                deleted = 0
+                if conf.delete_before_dump and mapping is not None:
+                    deleted = _update(conn, *build_delete_statement(
+                        table, mapping.constant_fields, ident_quote=q
+                    ))
+                inserted = _update(
+                    conn, f"INSERT INTO {table} ({cols}) SELECT {cols} FROM {staging}"
+                )
+                conn.commit()
+            except Exception:
+                conn.rollback()
+                raise
+        log.info("staged swap into %s: -%d +%d rows", table, deleted, inserted)
     finally:
-        conn.close()
+        try:
+            with _connection(spark, base_url, conf) as conn:
+                _update(conn, f"DROP TABLE {staging}")
+        except Py4JJavaError as exc:  # the load's own error, if any, propagates
+            log.warning("staging table %s not dropped: %s", staging, exc)

@@ -111,3 +111,76 @@ def test_cli_short_row_exit_9996(tmp_path):
     )
     proc = run_cli(conf)
     assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+def derby_rows(spark, db, sql):
+    """Rows of ``sql`` on the embedded Derby database ``db``, read in
+    the test's JVM, which then shuts the database down so the next CLI
+    process can boot it (embedded Derby admits one JVM at a time)."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    conn = jvm.java.sql.DriverManager.getConnection(f"jdbc:derby:{db}")
+    try:
+        rs = conn.createStatement().executeQuery(sql)
+        n = rs.getMetaData().getColumnCount()
+        rows = []
+        while rs.next():
+            rows.append(tuple(rs.getString(i) for i in range(1, n + 1)))
+    finally:
+        conn.close()
+    try:
+        jvm.java.sql.DriverManager.getConnection(f"jdbc:derby:{db};shutdown=true")
+    except Py4JJavaError:
+        pass  # Derby reports a clean shutdown as SQLState 08006
+    return sorted(rows, key=str)
+
+
+def test_cli_jdbc_loads_are_idempotent_and_a_failed_load_changes_nothing(
+    spark, tmp_path
+):
+    """The CLI's JDBC sink into Derby with the reference's
+    delete-before-insert: re-runs and another ds leave one copy of each
+    ds (NULLs included, into typed columns), and a short row that
+    fails the load leaves the target as it was."""
+    db = tmp_path / "clidb"
+
+    def conf_for(ds, tsv=TSV):
+        p = write_fixture(tmp_path, tsv=tsv)
+        p.write_text(
+            f"ds={ds}\n"
+            "source_format=tsv\n"
+            f"source_path={tmp_path}/dump.data\n"
+            "sink_format=jdbc\n"
+            f"jdbc_url=jdbc:derby:{db};create=true\n"
+            "jdbc_url_params=\n"
+            'jdbc_ident_quote="\n'
+            "jdbc_create_types=etype VARCHAR(20), uid VARCHAR(20), "
+            "amount VARCHAR(20), ds VARCHAR(20), version VARCHAR(20)\n"
+            "mysql_table=cli_t\n"
+            "delete_before_dump=true\n"
+        )
+        return p
+
+    for ds in ("20240101", "20240101", "20240102"):
+        proc = run_cli(conf_for(ds))
+        assert proc.returncode == 0, proc.stderr[-2000:]
+    query = 'SELECT "etype", "uid", "amount", "ds", "version" FROM cli_t'
+    one = [
+        ("click", "10", "1.5"),
+        ("purchase", "12", None),
+        ("view", None, "2.0"),
+    ]
+    expected = sorted(
+        [(*r, ds, "2.0") for r in one for ds in ("20240101", "20240102")],
+        key=str,
+    )
+    assert derby_rows(spark, db, query) == expected
+
+    proc = run_cli(conf_for("20240101", tsv=TSV + "4\tclick\n"))
+    assert proc.returncode == 9996 % 256, proc.stderr[-2000:]
+    assert derby_rows(spark, db, query) == expected
+    assert derby_rows(
+        spark, db, "SELECT TABLENAME FROM SYS.SYSTABLES "
+        "WHERE TABLENAME LIKE 'CLI_T__STAGING%'"
+    ) == []

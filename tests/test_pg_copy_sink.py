@@ -11,10 +11,10 @@ user (the sink itself is environment-gated the same way).
 
 Covers: round-trip fidelity through COPY text escaping (tabs,
 newlines, backslashes, literal ``\\N``, NULLs, floats, timestamps),
-truncate idempotency (run-twice == run-once), the atomic staged
-swap (run-twice stable AND a mid-load failure leaves the target
-untouched — PostgreSQL's transactional DDL makes this stronger than
-the JDBC staged path), and a 4-stream parallel write.
+the atomic staged swap (run-twice stable, a mid-load failure leaves
+the target untouched and no staging table behind, the target's
+primary key, indexes and CHECK constraints survive the swap), and a
+4-stream parallel write.
 """
 
 from __future__ import annotations
@@ -177,15 +177,6 @@ def test_append_roundtrip_escaping(pg, tricky_df):
     )
 
 
-def test_truncate_mode_is_idempotent(pg, tricky_df):
-    _q(pg, "DROP TABLE IF EXISTS t_tr; "
-           "CREATE TABLE t_tr (id bigint, txt text, val float8, "
-           "ts timestamp)")
-    PG.write_pg_copy(tricky_df, "t_tr", pg, mode="truncate")
-    PG.write_pg_copy(tricky_df, "t_tr", pg, mode="truncate")
-    assert _q(pg, "SELECT count(*) FROM t_tr") == "6"
-
-
 def test_staged_swap_run_twice_and_failure_isolation(pg, tricky_df, spark):
     _q(pg, "DROP TABLE IF EXISTS t_st CASCADE; "
            "CREATE TABLE t_st (id bigint, txt text, val float8, "
@@ -205,6 +196,29 @@ def test_staged_swap_run_twice_and_failure_isolation(pg, tricky_df, spark):
         PG.write_pg_copy(poison, "t_st", pg, mode="staged")
     assert _q(pg, "SELECT count(*) FROM t_st") == "6"
     assert _q(pg, "SELECT count(*) FROM t_st WHERE id IS NULL") == "0"
+    assert _q(pg, "SELECT count(*) FROM pg_tables "
+                  "WHERE tablename LIKE 't\\_st\\_\\_staging%'") == "0"
+
+
+def test_staged_swap_keeps_keys_indexes_and_checks(pg, tricky_df):
+    _q(pg, "DROP TABLE IF EXISTS t_con CASCADE; "
+           "CREATE TABLE t_con (id bigint PRIMARY KEY, txt text, "
+           "val float8 CONSTRAINT t_con_val_ck CHECK (val > -100), "
+           "ts timestamp); "
+           "CREATE UNIQUE INDEX t_con_txt_uq ON t_con (txt)")
+    for _ in range(2):
+        assert PG.write_pg_copy(tricky_df, "t_con", pg, mode="staged") == 6
+    assert _q(pg, "SELECT string_agg(contype::text, '' ORDER BY contype) "
+                  "FROM pg_constraint WHERE conrelid = 't_con'::regclass") == "cp"
+    assert _q(pg, "SELECT count(*) FROM pg_indexes WHERE tablename = 't_con' "
+                  "AND indexdef LIKE 'CREATE UNIQUE INDEX % (txt)'") == "1"
+    with pytest.raises(RuntimeError, match="duplicate key"):
+        _q(pg, "INSERT INTO t_con (id, txt) VALUES (1, 'dup')")
+    with pytest.raises(RuntimeError, match="duplicate key"):
+        _q(pg, "INSERT INTO t_con (id, txt) VALUES (99, 'plain')")
+    with pytest.raises(RuntimeError, match="t_con_val_ck"):
+        _q(pg, "INSERT INTO t_con (id, val) VALUES (98, -1000)")
+    assert _q(pg, "SELECT count(*) FROM t_con") == "6"
 
 
 def test_parallel_streams_exact_count(pg, spark):

@@ -5,7 +5,10 @@ folklore. Embedded Derby serializes writers internally (single-JVM
 lock manager), so the PARALLELISM column here under-reports what a
 real MySQL primary would gain — the sweep's value is the batchsize
 axis (wire batching) and the relative shape; re-run against a real
-target before tuning production. Results are recorded in SCALING.md.
+target before tuning production. Each cell is one whole ``write_jdbc``
+load: the distributed write into its staging table, then the swap's
+``INSERT ... SELECT`` into the target. Results are recorded in
+SCALING.md.
 
 Usage: python tools/jdbc_sweep.py [n_rows]
 """
