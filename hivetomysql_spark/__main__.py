@@ -18,7 +18,11 @@ Conf keys (reference keys plus file-source extensions):
   for non-Hive sources, default ``ds``; empty disables the filter),
   ``map_file`` (default: ``dump.map`` next to the conf file),
   ``sink_format`` (``jdbc`` default | ``parquet`` | ``none``),
-  ``sink_path`` (for parquet).
+  ``sink_path`` (for parquet), and the JDBC target's dialect:
+  ``jdbc_url``, ``jdbc_url_params``, ``jdbc_ident_quote``,
+  ``jdbc_create_types`` (see :func:`~hivetomysql_spark.sinks.jdbc.write_jdbc`).
+* accepted and ignored — the reference's ``skip_dump_to_local_file``
+  and ``skip_local_file_to_sql``: the engine has no local-file stage.
 """
 
 from __future__ import annotations
@@ -79,25 +83,7 @@ def make_sink(conf: DumpConf):
     if fmt == "parquet":
         return lambda df, c, m: write_parquet(df, c.raw["sink_path"], mode="overwrite")
     if fmt == "jdbc":
-        # optional dialect overrides (defaults = the reference's
-        # MySQL contract): jdbc_url for a non-MySQL target,
-        # jdbc_ident_quote for ANSI databases, jdbc_create_types for
-        # explicit DDL when the writer creates the table
-        def jdbc_sink(df, c, m):
-            write_jdbc(
-                df,
-                c,
-                m,
-                url=c.raw.get("jdbc_url"),
-                url_params=c.raw.get(
-                    "jdbc_url_params", "rewriteBatchedStatements=true"
-                )
-                or None,
-                ident_quote=c.raw.get("jdbc_ident_quote", "`"),
-                create_table_column_types=c.raw.get("jdbc_create_types"),
-            )
-
-        return jdbc_sink
+        return write_jdbc
     raise ValueError(f"unknown sink_format: {fmt!r}")
 
 

@@ -1,70 +1,49 @@
-"""Content hashes for sf1 value-certification staleness (verdict r8 #2,
-operator blind spot closed per verdict r9 #1).
+"""Content hashes for scale-point value-certification staleness.
 
-``SF1_CERTIFIED.json`` records which registry queries have had their
-complete output hash-matched against an oracle at the derived sf1
-point — but a certification is only as fresh as the code it ran
-against. ``query_hash`` fingerprints everything the certification
-compared: the registered query function's source, its DuckDB oracle
-SQL, (when the sf1 run substitutes one) the python oracle's source,
-AND the full source of every ``hivetomysql_spark.operators.*`` module
-the query actually uses. The pytest gate
-(``tests/test_sf1_cert_gate.py``) recomputes the hash for every
-certified query and fails on drift, forcing re-certification via
-``tools/sf1_rotation.py --recheck``.
+``SF1_CERTIFIED.json`` and ``SF10_CERTIFIED.json`` record which
+registry queries had their complete output hash-matched against an
+oracle at a derived scale point; ``diff_rotation.json`` records the
+same at sf0.01 for a rotating window. A certification is only as
+fresh as the code it ran against, so ``query_hash`` fingerprints what
+the certification compared:
 
-Operator-dependency detection (the r9 blind spot: an edit to a shared
-helper in ``operators/`` walked straight through the gate, commit
-08af627):
+* the registered query function's source, its oracle SQL and (when
+  the run substitutes one) the python oracle's source;
+* every ``hivetomysql_spark`` module the function executes, found by
+  one dependency walk (``_helper_deps``) and salted with its full
+  source under a ``kind:key`` label. The kind is ``op`` for
+  ``operators.<m>``, ``stream`` for ``streaming.<m>`` and ``core``
+  for any other dotted path (``tables``, ``config``,
+  ``sources.readers``, ...; a path that names no module reads as its
+  longest prefix that does). Paths under ``queries`` and ``certify``
+  salt nothing;
+* every module-level helper function (source) or simple constant
+  (repr) of the query's own module that the function reaches at
+  runtime (``_local_runtime_deps``), labelled ``loc:``.
 
-* direct references in the function source —
-  ``hivetomysql_spark.operators.<mod>`` anywhere in the fn body
-  catches the dominant fn-local-import style
-  (``from hivetomysql_spark.operators.ranks import global_row_number``);
-* module-level operator imports in the query's own module — each
-  bound name (``D`` from ``import dedup as D``, ``_dot`` from
-  ``from ...similarity import _dot``) is matched as a word against
-  the fn source, so only queries that USE the binding are salted,
-  not every query sharing the module (keeps recheck blast radius
-  proportional to real dependencies);
-* transitive closure over operator→operator imports (e.g. ``dedup``
-  imports ``parallelism``), so an edit to a second-level helper
-  still trips every certification that executes it.
+The walk starts from the text of the function and of its module-local
+helpers. It collects each ``hivetomysql_spark.<dotted path>`` written
+there, plus each name the query module binds at top level from a
+package import (``D`` from ``from ...operators import dedup as D``)
+when that name appears as a word in the text. It then closes over the
+references in each reached module's source, across all three kinds.
+A missing module hashes as ``''``, so deleting one still moves the
+hash. The pytest gates (``tests/test_sf1_cert_gate.py``,
+``tests/test_diff_rotation_gate.py``) recompute the hashes and fail
+on drift; ``tools/sf1_rotation.py --recheck`` re-certifies the stale
+set.
 
-Module-local runtime dependencies are salted the same way: a
-module-level helper function or constant the query fn references at
-runtime (``fn.__code__.co_names``, recursing into nested
-comprehension/lambda code objects and into helper→helper references
-within the module) folds its source (functions) or repr (simple
-constants) into the hash. Oracle-STRING builder helpers need no
-special handling — their output is the oracle argument, which is
-hashed directly.
+Residual blind spots:
 
-``streaming/*`` helper modules are salted with the identical
-mechanism (r10: an edit to ``streaming/windows.py`` changed
-``stream_enrich_batch``'s executed plan without tripping its
-certification — the same blind-spot class the operator salt closed
-in r9). The fixpoint crosses packages: a streaming module that
-imports an operator module pulls that operator's source into the
-hash too.
-
-Core modules (r11 — the last two documented salt gaps, verdict r10
-#2): every OTHER ``hivetomysql_spark`` module a query references —
-``tables.py``, ``config.py``, ``pipeline.py``, ``errors.py``,
-``sources/*``, ``sinks/*``, ``plans/*`` — is salted with the same
-reference + module-level-import-alias + transitive-closure mechanism
-(kind ``core``, keyed by dotted path under the package). Every
-registry query loads fixtures through ``tables.load_table``, so a
-``tables.py`` edit now trips all 475 certifications instead of
-walking through the gate (the r03 NTZ-cast incident class,
-BASELINE.md:28-32); the parity queries additionally carry
-``config``/``pipeline``/``errors``. The closure crosses all three
-kinds: a core module that imports another core/operator module pulls
-its source in too (e.g. ``sources/__init__`` → ``sources.readers``).
-
-Residual blind spots, by design: cross-QUERY-module imports (none —
-each query's module-local helpers are salted by
-``_local_runtime_deps``) and dynamic dispatch (none in the repo).
+* the key is source bytes, so a comment edit stales a certificate as
+  surely as a semantic one;
+* dynamic dispatch (``importlib``, ``getattr`` on a module) is not
+  followed;
+* a parenthesised multi-line import is read as binding the name
+  ``(``: its module is salted for every function whose text holds a
+  call such as ``f(x``, whether or not it uses the imported names;
+* a helper function imported from another query module is not salted
+  (no registry query calls one at runtime today).
 """
 
 from __future__ import annotations
@@ -74,224 +53,134 @@ import inspect
 import os
 import re
 import sys
+import types
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
-_OP_DIR = os.path.join(_PKG_DIR, "operators")
-_ST_DIR = os.path.join(_PKG_DIR, "streaming")
-_OP_REF_RE = re.compile(r"hivetomysql_spark\.operators\.(\w+)")
-_ST_REF_RE = re.compile(r"hivetomysql_spark\.streaming\.(\w+)")
-# any other hivetomysql_spark module (tables, config, pipeline,
-# errors, sources.*, sinks.*, plans.*) — operators/streaming have
-# their own kinds above; queries/ and this module are the documented
-# exclusions
-_CORE_REF_RE = re.compile(
-    r"hivetomysql_spark\."
-    r"((?!operators\b|streaming\b|queries\b|certify\b)\w+(?:\.\w+)*)"
+_TOOLS_DIR = os.path.join(os.path.dirname(_PKG_DIR), "tools")
+# walk kinds in hash order; kinds with a package name cover that
+# package's submodules, ``core`` covers every other module
+_KINDS = {"op": "operators", "stream": "streaming", "core": None}
+_UNSALTED = ("queries", "certify")
+_REF_RE = re.compile(r"hivetomysql_spark\.(\w+(?:\.\w+)*)")
+# top-level import forms that bind package names into a query module;
+# group(1)=dotted tail, group(2)=imported-names clause (from form),
+# group(3)=dotted tail, group(4)=alias (import ... as form)
+_IMPORT_RE = re.compile(
+    r"^(?:from\s+hivetomysql_spark((?:\.\w+)*)\s+import\s+(.+)|"
+    r"import\s+hivetomysql_spark((?:\.\w+)+)\s+as\s+(\w+))\s*$"
 )
-# module-level import forms that bind operator names into a query
-# module's namespace; group(1)=submodule path tail ('' for the pkg
-# itself), group(2)=imported-names clause
-_OP_IMPORT_RE = re.compile(
-    r"^(?:from\s+hivetomysql_spark\.operators(\.\w+)?\s+import\s+(.+)|"
-    r"import\s+hivetomysql_spark\.operators(\.\w+)?(?:\s+as\s+(\w+))?)\s*$"
-)
-_ST_IMPORT_RE = re.compile(
-    r"^(?:from\s+hivetomysql_spark\.streaming(\.\w+)?\s+import\s+(.+)|"
-    r"import\s+hivetomysql_spark\.streaming(\.\w+)?(?:\s+as\s+(\w+))?)\s*$"
-)
-# core-module import forms; the tail may be nested (sources.readers).
-# Also matches operator/streaming imports — the alias builder filters
-# those out (they are handled by the kinds above).
-_CORE_IMPORT_RE = re.compile(
-    r"^(?:from\s+hivetomysql_spark((?:\.\w+)+)?\s+import\s+(.+)|"
-    r"import\s+hivetomysql_spark((?:\.\w+)+)(?:\s+as\s+(\w+))?)\s*$"
-)
-_CORE_EXCLUDED = ("operators", "streaming", "queries", "certify")
 
-_OP_SRC_CACHE: dict[str, str] = {}
-_ST_SRC_CACHE: dict[str, str] = {}
-_CORE_SRC_CACHE: dict[str, str] = {}
-_MODULE_ALIAS_CACHE: dict[str, dict[str, str]] = {}
-_ST_ALIAS_CACHE: dict[str, dict[str, str]] = {}
-_CORE_ALIAS_CACHE: dict[str, dict[str, str]] = {}
+_SRC_CACHE: dict[str, str] = {}
+_ALIAS_CACHE: dict[str, dict[str, tuple[str, str]]] = {}
 
 
-def _op_source(mod: str) -> str:
-    """Source text of ``hivetomysql_spark/operators/<mod>.py`` ('' if
-    no such module — a stale reference hashes as empty rather than
-    erroring, so deleting an operator still trips the gate)."""
-    if mod not in _OP_SRC_CACHE:
-        path = os.path.join(_OP_DIR, f"{mod}.py")
-        try:
-            _OP_SRC_CACHE[mod] = open(path).read()
-        except OSError:
-            _OP_SRC_CACHE[mod] = ""
-    return _OP_SRC_CACHE[mod]
+def _dep(path: str) -> tuple[str, str] | None:
+    """(kind, key) a dotted path under the package salts, or None."""
+    head, _, rest = path.partition(".")
+    if not head or head in _UNSALTED:
+        return None
+    for kind, pkg in _KINDS.items():
+        if head == pkg:
+            return (kind, rest.split(".")[0]) if rest else None
+    return "core", path
 
 
-def _st_source(mod: str) -> str:
-    """Source text of ``hivetomysql_spark/streaming/<mod>.py`` (same
-    empty-on-missing contract as ``_op_source``)."""
-    if mod not in _ST_SRC_CACHE:
-        path = os.path.join(_ST_DIR, f"{mod}.py")
-        try:
-            _ST_SRC_CACHE[mod] = open(path).read()
-        except OSError:
-            _ST_SRC_CACHE[mod] = ""
-    return _ST_SRC_CACHE[mod]
+def _path(kind: str, key: str) -> str:
+    pkg = _KINDS[kind]
+    return f"{pkg}.{key}" if pkg else key
 
 
-def _core_source(modpath: str) -> str:
-    """Source text of the core module at dotted path ``modpath`` under
-    ``hivetomysql_spark/`` (``tables`` → tables.py, ``sources.readers``
-    → sources/readers.py, ``sources`` → sources/__init__.py). A
-    reference whose full path is no module (e.g. a docstring mention
-    of a function, ``sources.readers.read_tsv``) resolves to its
-    longest prefix that IS one; if nothing resolves it hashes as ''
-    under the ORIGINAL path — so deleting a module still trips the
-    gate (same contract as ``_op_source``)."""
-    if modpath not in _CORE_SRC_CACHE:
+def _source(path: str) -> str:
+    """Source of the module at dotted ``path`` under the package: the
+    longest prefix of ``path`` that is a non-empty module (``sources``
+    reads ``sources/__init__.py``; a docstring mention such as
+    ``sources.readers.read_tsv`` reads ``sources/readers.py``), never
+    falling back to the bare ``operators``/``streaming`` package; ''
+    when nothing resolves."""
+    if path not in _SRC_CACHE:
         src = ""
-        parts = modpath.split(".")
+        parts = path.split(".")
         for k in range(len(parts), 0, -1):
+            if _dep(".".join(parts[:k])) is None:
+                break
             base = os.path.join(_PKG_DIR, *parts[:k])
-            for path in (base + ".py", os.path.join(base, "__init__.py")):
+            for file in (base + ".py", os.path.join(base, "__init__.py")):
                 try:
-                    src = open(path).read()
+                    src = open(file).read()
                     break
                 except OSError:
                     continue
             if src:
                 break
-        _CORE_SRC_CACHE[modpath] = src
-    return _CORE_SRC_CACHE[modpath]
+        _SRC_CACHE[path] = src
+    return _SRC_CACHE[path]
 
 
-def _module_pkg_aliases(
-    module_name: str, import_re, cache: dict
-) -> dict[str, str]:
-    """Map of names a query module binds at top level from the given
-    helper package's imports → the submodule they come from."""
-    if module_name in cache:
-        return cache[module_name]
-    aliases: dict[str, str] = {}
-    mod = sys.modules.get(module_name)
-    try:
-        src = inspect.getsource(mod) if mod else ""
-    except (OSError, TypeError):
-        src = ""
-    for line in src.splitlines():
-        m = import_re.match(line)
-        if not m:
-            continue
-        if m.group(2) is not None:  # from ... import names
-            sub = (m.group(1) or "").lstrip(".")
-            for item in m.group(2).split(","):
-                parts = item.strip().split()
-                if not parts:
-                    continue
-                name = parts[0]
-                bound = parts[2] if len(parts) == 3 else name
-                # `from ...operators import dedup as D` binds a
-                # submodule; `from ...operators.dedup import f` binds
-                # a function within `sub`
-                aliases[bound] = sub or name
-        else:  # import hivetomysql_spark.<pkg>.x [as y]
-            sub = (m.group(3) or "").lstrip(".")
-            if sub:
-                aliases[m.group(4) or sub] = sub
-    cache[module_name] = aliases
-    return aliases
+def _module_aliases(module_name: str) -> dict[str, tuple[str, str]]:
+    """Names a query module binds at top level from package imports →
+    the (kind, key) they come from."""
+    if module_name not in _ALIAS_CACHE:
+        aliases: dict[str, tuple[str, str]] = {}
+        mod = sys.modules.get(module_name)
+        try:
+            src = inspect.getsource(mod) if mod else ""
+        except (OSError, TypeError):
+            src = ""
+        for line in src.splitlines():
+            m = _IMPORT_RE.match(line)
+            if not m:
+                continue
+            if m.group(2) is None:  # import hivetomysql_spark.x as y
+                bindings = [(m.group(4), m.group(3).lstrip("."))]
+            else:
+                tail = m.group(1).lstrip(".")
+                bindings = []
+                for item in m.group(2).split(","):
+                    parts = item.strip().split()
+                    if not parts:
+                        continue
+                    # `from ...operators import dedup as D` binds a
+                    # submodule; `from ...operators.dedup import f`
+                    # binds a name within the module `tail`
+                    path = tail if _dep(tail) else f"{tail}.{parts[0]}".lstrip(".")
+                    bindings.append((parts[2] if len(parts) == 3 else parts[0], path))
+            for bound, path in bindings:
+                if dep := _dep(path):
+                    aliases[bound] = dep
+        _ALIAS_CACHE[module_name] = aliases
+    return _ALIAS_CACHE[module_name]
 
 
-def _module_operator_aliases(module_name: str) -> dict[str, str]:
-    return _module_pkg_aliases(module_name, _OP_IMPORT_RE, _MODULE_ALIAS_CACHE)
-
-
-def _module_streaming_aliases(module_name: str) -> dict[str, str]:
-    return _module_pkg_aliases(module_name, _ST_IMPORT_RE, _ST_ALIAS_CACHE)
-
-
-def _module_core_aliases(module_name: str) -> dict[str, str]:
-    """Core-module bindings; operator/streaming/queries imports (which
-    the broader _CORE_IMPORT_RE also matches) are filtered to their
-    own kinds."""
-    raw = _module_pkg_aliases(module_name, _CORE_IMPORT_RE, _CORE_ALIAS_CACHE)
-    return {
-        bound: sub
-        for bound, sub in raw.items()
-        if sub.split(".")[0] not in _CORE_EXCLUDED
-    }
-
-
-def _helper_deps(fn) -> tuple[list[str], list[str], list[str]]:
-    """(operator submodules, streaming submodules, core modules) the
-    query function executes: direct refs + used module-level bindings
-    + the transitive import closure ACROSS all three kinds (a
-    streaming module that imports an operator module pulls it in; a
-    core module that imports another core module — sources/__init__ →
-    sources.readers — likewise)."""
+def _helper_deps(fn) -> list[tuple[str, str]]:
+    """(kind, key) of every package module the query function
+    executes, in hash order (kinds as in ``_KINDS``, keys sorted)."""
     try:
         fn_src = inspect.getsource(fn)
     except (OSError, TypeError):
-        return [], [], []
-    # Scan the fn source PLUS its module-local helper sources: a query
-    # that reaches load_table/run_pipeline/an operator only through a
-    # module-level helper (e.g. parity_mapping → parity_mapping_df →
-    # run_pipeline) must still pick up those modules' salts — the
-    # helper's own source is salted by _local_runtime_deps, but the
-    # modules IT executes need the closure too (r11).
-    fn_src = fn_src + "\n" + "\n".join(
-        src for _, src in _local_runtime_deps(fn)
-    )
-    ops = set(_OP_REF_RE.findall(fn_src))
-    sts = set(_ST_REF_RE.findall(fn_src))
-    cores = set(_CORE_REF_RE.findall(fn_src))
-    for bound, sub in _module_operator_aliases(fn.__module__).items():
-        if bound not in ops and re.search(rf"\b{re.escape(bound)}\b", fn_src):
-            ops.add(sub)
-    for bound, sub in _module_streaming_aliases(fn.__module__).items():
-        if bound not in sts and re.search(rf"\b{re.escape(bound)}\b", fn_src):
-            sts.add(sub)
-    for bound, sub in _module_core_aliases(fn.__module__).items():
-        if sub not in cores and re.search(rf"\b{re.escape(bound)}\b", fn_src):
-            cores.add(sub)
-    frontier = (
-        [("op", m) for m in ops]
-        + [("st", m) for m in sts]
-        + [("core", m) for m in cores]
-    )
+        return []
+    # a query that reaches load_table/run_pipeline/an operator only
+    # through a module-level helper (parity_mapping → parity_mapping_df
+    # → run_pipeline) must pick up those modules too
+    text = "\n".join([fn_src] + [src for _, src in _local_runtime_deps(fn)])
+    deps = {d for d in map(_dep, _REF_RE.findall(text)) if d}
+    deps |= {
+        dep
+        for bound, dep in _module_aliases(fn.__module__).items()
+        if re.search(rf"\b{re.escape(bound)}\b", text)
+    }
+    frontier = list(deps)
     while frontier:
-        kind, mod = frontier.pop()
-        src = (
-            _op_source(mod)
-            if kind == "op"
-            else _st_source(mod) if kind == "st" else _core_source(mod)
-        )
-        for x in set(_OP_REF_RE.findall(src)) - ops:
-            ops.add(x)
-            frontier.append(("op", x))
-        for x in set(_ST_REF_RE.findall(src)) - sts:
-            sts.add(x)
-            frontier.append(("st", x))
-        for x in set(_CORE_REF_RE.findall(src)) - cores:
-            cores.add(x)
-            frontier.append(("core", x))
-    return sorted(ops), sorted(sts), sorted(cores)
-
-
-def _operator_deps(fn) -> list[str]:
-    """Sorted operator submodules the query function executes (the
-    streaming half of ``_helper_deps`` is dropped — kept as the
-    stable surface the sensitivity pytest asserts against)."""
-    return _helper_deps(fn)[0]
+        for d in map(_dep, _REF_RE.findall(_source(_path(*frontier.pop())))):
+            if d and d not in deps:
+                deps.add(d)
+                frontier.append(d)
+    order = list(_KINDS)
+    return sorted(deps, key=lambda d: (order.index(d[0]), d[1]))
 
 
 def _code_names(code) -> set[str]:
     """Global names a code object references, including inside nested
     comprehension / lambda / genexp code objects."""
-    import types
-
     names = set(code.co_names)
     for c in code.co_consts:
         if isinstance(c, types.CodeType):
@@ -303,11 +192,8 @@ def _local_runtime_deps(fn) -> list[tuple[str, str]]:
     """(name, source-or-repr) for module-level names the fn references
     at runtime and that are DEFINED in the fn's own module: helper
     functions (source; fixpoint over helper→helper references) and
-    simple constants (repr). Imported objects are excluded — operators
-    are handled by ``_operator_deps``, and other modules are the
-    documented residual."""
-    import types
-
+    simple constants (repr). Imported objects are excluded — package
+    modules are salted by ``_helper_deps``."""
     mod = sys.modules.get(fn.__module__)
     code = getattr(fn, "__code__", None)
     if mod is None or code is None:
@@ -336,25 +222,14 @@ def _local_runtime_deps(fn) -> list[tuple[str, str]]:
     return sorted(out.items())
 
 
-def query_hash(
-    name: str,
-    fn,
-    oracle: str | None,
-    py_oracle=None,
-    include_ops: bool = True,
-    include_locals: bool = True,
-    include_streaming: bool = True,
-    include_core: bool = True,
-) -> str:
-    """sha256 over (fn source, oracle SQL, py-oracle source, operator/
-    streaming/core module sources the fn uses).
+def query_hash(name: str, fn, oracle: str | None, py_oracle=None) -> str:
+    """sha256 over (fn source, oracle SQL, py-oracle source, the
+    sources of the package modules and module-local helpers the fn
+    executes).
 
     ``inspect.getsource`` includes the decorator line, so an edit to
     an inline oracle string registered via the decorator is caught
     twice (once in the source, once in the oracle arg) — harmless.
-    The ``include_*=False`` knobs reproduce each prior formula
-    generation byte-exactly (the migration path in
-    ``tools/sf1_rotation.py --migrate``).
     """
     h = hashlib.sha256()
     h.update(name.encode())
@@ -365,57 +240,27 @@ def query_hash(
     h.update(b"\x00")
     if py_oracle is not None:
         h.update(inspect.getsource(py_oracle).encode())
-    if include_ops or include_streaming or include_core:
-        op_deps, st_deps, core_deps = _helper_deps(fn)
-        if include_ops:
-            for dep in op_deps:
-                h.update(b"\x00op:" + dep.encode() + b"\x00")
-                h.update(_op_source(dep).encode())
-        if include_streaming:
-            # Independently of include_ops, so include_ops=False,
-            # include_streaming=True callers still get the stream salt
-            # (was silently a no-op when nested inside include_ops).
-            for dep in st_deps:
-                h.update(b"\x00stream:" + dep.encode() + b"\x00")
-                h.update(_st_source(dep).encode())
-        if include_core:
-            for dep in core_deps:
-                h.update(b"\x00core:" + dep.encode() + b"\x00")
-                h.update(_core_source(dep).encode())
-    if include_locals:
-        for dep_name, src in _local_runtime_deps(fn):
-            h.update(b"\x00loc:" + dep_name.encode() + b"\x00")
-            h.update(src.encode())
+    for kind, key in _helper_deps(fn):
+        h.update(f"\x00{kind}:{key}\x00".encode())
+        h.update(_source(_path(kind, key)).encode())
+    for dep_name, src in _local_runtime_deps(fn):
+        h.update(b"\x00loc:" + dep_name.encode() + b"\x00")
+        h.update(src.encode())
     return h.hexdigest()[:16]
 
 
-def registry_hashes(
-    include_ops: bool = True,
-    include_locals: bool = True,
-    include_streaming: bool = True,
-    include_core: bool = True,
-) -> dict[str, str]:
+def registry_hashes() -> dict[str, str]:
     """Current content hash for every registered query."""
     from hivetomysql_spark.queries import REGISTRY, _load_all
 
+    if _TOOLS_DIR not in sys.path:
+        sys.path.insert(0, _TOOLS_DIR)
     try:
-        sys.path.insert(
-            0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
-        )
         from py_oracles import PY_ORACLES  # type: ignore
-    except ImportError:  # tools/ not on path (installed package)
+    except ImportError:  # tools/ absent (installed package)
         PY_ORACLES = {}
     _load_all()
     return {
-        name: query_hash(
-            name,
-            q.fn,
-            q.oracle,
-            PY_ORACLES.get(name),
-            include_ops=include_ops,
-            include_locals=include_locals,
-            include_streaming=include_streaming,
-            include_core=include_core,
-        )
+        name: query_hash(name, q.fn, q.oracle, PY_ORACLES.get(name))
         for name, q in REGISTRY.items()
     }

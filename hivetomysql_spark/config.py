@@ -77,8 +77,6 @@ class DumpConf:
     mysql_password: str = ""
     delete_before_dump: bool = False
     mode: str = ""  # "test" ⇒ dry-run (HiveToMysql.java:127,560-564)
-    skip_dump_to_local_file: bool = False
-    skip_local_file_to_sql: bool = False
     skip_sql_to_target: bool = False
     error_if_none_data: bool = False
     error_if_src_field_not_exsits: bool = False  # [sic] key name matches reference
@@ -91,8 +89,6 @@ class DumpConf:
             k: props.get(k, "false").lower() == "true"
             for k in (
                 "delete_before_dump",
-                "skip_dump_to_local_file",
-                "skip_local_file_to_sql",
                 "skip_sql_to_target",
                 "error_if_none_data",
                 "error_if_src_field_not_exsits",

@@ -105,15 +105,11 @@ def write_jdbc(
     batch_size: int = DEFAULT_BATCH_SIZE,
     max_connections: int = DEFAULT_MAX_WRITE_CONNECTIONS,
     isolation_level: str = "READ_COMMITTED",
-    url: str | None = None,
-    url_params: str | None = "rewriteBatchedStatements=true",
-    ident_quote: str = "`",
-    create_table_column_types: str | None = None,
 ) -> None:
     """Load ``df`` into ``conf.mysql_table`` atomically.
 
     1. A missing target is created with Spark's dialect DDL
-       (``create_table_column_types`` picks explicit column types, e.g.
+       (``jdbc_create_types`` picks explicit column types, e.g.
        VARCHAR instead of Derby's CLOB, which is not ``=``-comparable,
        or MySQL's TEXT); an existing one is left as it is.
     2. The distributed writer loads ``df``, coalesced to at most
@@ -136,15 +132,22 @@ def write_jdbc(
     schema; without them it fails at the staging ``CREATE``, before any
     target row is touched.
 
-    ``url``/``url_params``/``ident_quote`` default to the reference's
-    MySQL target; the Derby integration tests override them (ANSI
-    quotes, no MySQL URL params) — the write path is otherwise
-    identical.
+    The target's dialect comes from conf keys, defaulting to the
+    reference's MySQL target: ``jdbc_url`` (default
+    :attr:`DumpConf.jdbc_url`, from ``mysql_ip``/``mysql_port``/
+    ``mysql_db``), ``jdbc_url_params`` (default
+    ``rewriteBatchedStatements=true``; empty for none),
+    ``jdbc_ident_quote`` (default a backtick; ``"`` for ANSI databases
+    such as Derby) and ``jdbc_create_types``. The CLI and the stream
+    writer pass the same conf, so both load the same target.
     """
     spark = df.sparkSession
     table = conf.mysql_table
     staging = f"{table}__staging_{uuid.uuid4().hex[:8]}"
-    base_url = url or conf.jdbc_url
+    base_url = conf.raw.get("jdbc_url") or conf.jdbc_url
+    url_params = conf.raw.get("jdbc_url_params", "rewriteBatchedStatements=true")
+    q = conf.raw.get("jdbc_ident_quote", "`")
+    create_types = conf.raw.get("jdbc_create_types")
     writer_url = base_url + (f"?{url_params}" if url_params else "")
 
     def append(frame: DataFrame, dbtable: str, column_types: str | None = None) -> None:
@@ -160,9 +163,8 @@ def write_jdbc(
             writer = writer.option("createTableColumnTypes", column_types)
         writer.mode("append").save()
 
-    append(df.limit(0), table, create_table_column_types)
+    append(df.limit(0), table, create_types)
 
-    q = ident_quote
     cols = ", ".join(f"{q}{c}{q}" for c in df.columns)
     try:
         # coalesce never adds partitions: a frame at or below the cap

@@ -120,7 +120,8 @@ def dedup_events(
 def write_stream_to_jdbc(stream_df: DataFrame, conf, mapping, checkpoint: str):
     """Streaming → MySQL via foreachBatch: each microbatch goes
     through the SAME batch JDBC sink (sinks/jdbc.py), preserving the
-    reference's load semantics per batch. Exactly-once is
+    reference's load semantics per batch; the conf's ``jdbc_*`` keys
+    pick the target's dialect as they do for the CLI. Exactly-once is
     approximated by idempotent delete-before-insert on retries when
     the mapping carries batch-identifying constants.
     """

@@ -20,6 +20,15 @@ def test_delete_statement_no_constants():
     assert params == []
 
 
+def derby_conf(url: str, text: str, column_types: str | None = None) -> DumpConf:
+    """A conf that points the sink at an embedded Derby database: no
+    MySQL URL params, ANSI identifier quotes."""
+    dialect = f'jdbc_url={url}\njdbc_url_params=\njdbc_ident_quote="\n'
+    if column_types:
+        dialect += f"jdbc_create_types={column_types}\n"
+    return DumpConf.from_text(dialect + text)
+
+
 def test_jdbc_roundtrip_idempotent_derby(spark, tmp_path):
     """End-to-end JDBC sink against a REAL database (embedded Derby,
     shipped with Spark): initial load, then the delete-before-insert
@@ -29,8 +38,8 @@ def test_jdbc_roundtrip_idempotent_derby(spark, tmp_path):
     from hivetomysql_spark.sources import read_jdbc
 
     url = f"jdbc:derby:{tmp_path}/derbydb;create=true"
-    conf = DumpConf.from_text(
-        "mysql_table=app_t\ndelete_before_dump=true\nds=20240101\n"
+    conf = derby_conf(
+        url, "mysql_table=app_t\ndelete_before_dump=true\nds=20240101\n"
     )
     mapping = DumpMap.from_text("val=x\nds=$ds\nversion=#2.0\n", conf=conf)
     df = spark.createDataFrame(
@@ -38,14 +47,14 @@ def test_jdbc_roundtrip_idempotent_derby(spark, tmp_path):
         ["val", "ds", "version"],
     )
     # first write (no delete) creates the table with typed columns
-    plain_conf = DumpConf.from_text("mysql_table=app_t\nds=20240101\n")
-    write_jdbc(
-        df, plain_conf, mapping, url=url, url_params=None, ident_quote='"',
-        create_table_column_types="val VARCHAR(50), ds VARCHAR(20), version VARCHAR(20)",
+    plain_conf = derby_conf(
+        url, "mysql_table=app_t\nds=20240101\n",
+        "val VARCHAR(50), ds VARCHAR(20), version VARCHAR(20)",
     )
+    write_jdbc(df, plain_conf, mapping)
     # two idempotent re-imports with delete-before-insert
     for _ in range(2):
-        write_jdbc(df, conf, mapping, url=url, url_params=None, ident_quote='"')
+        write_jdbc(df, conf, mapping)
     back = read_jdbc(spark, url, "app_t")
     rows = [(r.val, r.ds, r.version) for r in back.collect()]
     assert sorted(rows) == [
@@ -55,12 +64,12 @@ def test_jdbc_roundtrip_idempotent_derby(spark, tmp_path):
 
     # a different ds partition must survive a re-import of 20240101
     df2 = spark.createDataFrame([("c", "20240102", "2.0")], ["val", "ds", "version"])
-    conf2 = DumpConf.from_text(
-        "mysql_table=app_t\ndelete_before_dump=true\nds=20240102\n"
+    conf2 = derby_conf(
+        url, "mysql_table=app_t\ndelete_before_dump=true\nds=20240102\n"
     )
     mapping2 = DumpMap.from_text("val=x\nds=$ds\nversion=#2.0\n", conf=conf2)
-    write_jdbc(df2, conf2, mapping2, url=url, url_params=None, ident_quote='"')
-    write_jdbc(df, conf, mapping, url=url, url_params=None, ident_quote='"')
+    write_jdbc(df2, conf2, mapping2)
+    write_jdbc(df, conf, mapping)
     back2 = read_jdbc(spark, url, "app_t")
     assert back2.count() == 3  # a, b (20240101) + c (20240102)
 
@@ -96,21 +105,17 @@ def test_jdbc_swap_idempotent_and_atomic(spark, tmp_path):
         ("a0", "20240101", "2.0"), ("b0", "20240101", "2.0"),
         ("keep", "20240102", "2.0"),
     ])
-    plain_conf = DumpConf.from_text("mysql_table=app_s\nds=20240101\n")
-    write_jdbc(
-        seed, plain_conf, None, url=url, url_params=None, ident_quote='"',
-        create_table_column_types=ddl,
-    )
+    write_jdbc(seed, derby_conf(url, "mysql_table=app_s\nds=20240101\n", ddl), None)
 
-    conf = DumpConf.from_text(
-        "mysql_table=app_s\ndelete_before_dump=true\nds=20240101\n"
+    conf = derby_conf(
+        url, "mysql_table=app_s\ndelete_before_dump=true\nds=20240101\n"
     )
     mapping = DumpMap.from_text("val=x\nds=$ds\nversion=#2.0\n", conf=conf)
     fresh = mk([("a1", "20240101", "2.0"), ("b1", "20240101", "2.0")])
 
     # (a) run-twice idempotency: two swaps == one
     for _ in range(2):
-        write_jdbc(fresh, conf, mapping, url=url, url_params=None, ident_quote='"')
+        write_jdbc(fresh, conf, mapping)
     rows = sorted(
         (r.val, r.ds) for r in read_jdbc(spark, url, "app_s").collect()
     )
@@ -131,7 +136,7 @@ def test_jdbc_swap_idempotent_and_atomic(spark, tmp_path):
         [("x", "20240101", "2.0"), ("y", "20240101", "2.0")]
     ).withColumn("val", boom("val"))
     with pytest.raises(Exception):
-        write_jdbc(bad, conf, mapping, url=url, url_params=None, ident_quote='"')
+        write_jdbc(bad, conf, mapping)
     rows2 = sorted(
         (r.val, r.ds) for r in read_jdbc(spark, url, "app_s").collect()
     )
@@ -140,7 +145,7 @@ def test_jdbc_swap_idempotent_and_atomic(spark, tmp_path):
 
     # (c) recovery: the next good run swaps cleanly
     fresh2 = mk([("a2", "20240101", "2.0")])
-    write_jdbc(fresh2, conf, mapping, url=url, url_params=None, ident_quote='"')
+    write_jdbc(fresh2, conf, mapping)
     rows3 = sorted(
         (r.val, r.ds) for r in read_jdbc(spark, url, "app_s").collect()
     )
@@ -157,19 +162,16 @@ def test_jdbc_without_delete_appends_and_keeps_other_ds(spark, tmp_path):
     url = f"jdbc:derby:{tmp_path}/derbydb3;create=true"
     ddl = "val VARCHAR(50), ds VARCHAR(20)"
     for val, ds in (("old", "20240101"), ("new", "20240102")):
-        conf = DumpConf.from_text(f"mysql_table=app_a\nds={ds}\n")
+        conf = derby_conf(url, f"mysql_table=app_a\nds={ds}\n", ddl)
         mapping = DumpMap.from_text("val=x\nds=$ds\n", conf=conf)
         df = spark.createDataFrame([(val, ds)], ["val", "ds"])
-        write_jdbc(
-            df, conf, mapping, url=url, url_params=None, ident_quote='"',
-            create_table_column_types=ddl,
-        )
+        write_jdbc(df, conf, mapping)
     rows = sorted((r.val, r.ds) for r in read_jdbc(spark, url, "app_a").collect())
     assert rows == [("new", "20240102"), ("old", "20240101")]
 
 
 def test_jdbc_null_loads_into_typed_target(spark, tmp_path):
-    """A NULL reaches a target created with ``create_table_column_types``
+    """A NULL reaches a target created with ``jdbc_create_types``
     (Derby's VARCHAR refuses the CLOB-typed NULL Spark binds for a
     string, so the value travels through the default-typed staging
     table)."""
@@ -177,18 +179,16 @@ def test_jdbc_null_loads_into_typed_target(spark, tmp_path):
     from hivetomysql_spark.sources import read_jdbc
 
     url = f"jdbc:derby:{tmp_path}/derbydb4;create=true"
-    conf = DumpConf.from_text(
-        "mysql_table=app_n\ndelete_before_dump=true\nds=20240101\n"
+    conf = derby_conf(
+        url, "mysql_table=app_n\ndelete_before_dump=true\nds=20240101\n",
+        "val VARCHAR(50), ds VARCHAR(20)",
     )
     mapping = DumpMap.from_text("val=x\nds=$ds\n", conf=conf)
     df = spark.createDataFrame(
         [("a", "20240101"), (None, "20240101")], "val string, ds string"
     )
     for _ in range(2):
-        write_jdbc(
-            df, conf, mapping, url=url, url_params=None, ident_quote='"',
-            create_table_column_types="val VARCHAR(50), ds VARCHAR(20)",
-        )
+        write_jdbc(df, conf, mapping)
     back = read_jdbc(spark, url, "app_n")
     assert dict(back.dtypes)["val"] == "string"
     assert sorted(back.collect(), key=lambda r: r.val or "") == [
@@ -209,11 +209,8 @@ def test_jdbc_tasks_are_partitions_capped_by_max_connections(
     from hivetomysql_spark.sources import read_jdbc
 
     url = f"jdbc:derby:{tmp_path}/derbydb5;create=true"
-    conf = DumpConf.from_text("mysql_table=app_c\nds=20240101\n")
+    conf = derby_conf(url, "mysql_table=app_c\nds=20240101\n")
     df = spark.range(0, 2000, numPartitions=parts)
-    _, jobs = spark_jobs(lambda: write_jdbc(
-        df, conf, None, url=url, url_params=None, ident_quote='"',
-        max_connections=cap,
-    ))
+    _, jobs = spark_jobs(lambda: write_jdbc(df, conf, None, max_connections=cap))
     assert jobs == [[], [tasks]], jobs
     assert read_jdbc(spark, url, "app_c").count() == 2000

@@ -96,23 +96,42 @@ def test_hash_is_sensitive_to_source_and_oracle_edits():
     assert query_hash("q", q_v1, "SELECT 1 AS x") == base
 
 
+def _keys(fn, kind):
+    """Keys of one kind in the query fn's dependency walk."""
+    from hivetomysql_spark import certify
+
+    return [key for k, key in certify._helper_deps(fn) if k == kind]
+
+
+def _edit_source(monkeypatch, *paths):
+    """Swap the walk's one source reader for one that appends a comment
+    to the modules at the given dotted paths, as an on-disk edit
+    would."""
+    from hivetomysql_spark import certify
+
+    real = certify._source
+    monkeypatch.setattr(
+        certify,
+        "_source",
+        lambda path: real(path) + "\n#x\n" if path in paths else real(path),
+    )
+
+
 def test_operator_edit_trips_staleness(monkeypatch):
-    """The r9 blind spot, closed (verdict r9 #1): an edit to a shared
-    helper in ``operators/`` must change the content hash of every
-    certified query that executes it — proven here by swapping the
-    operator-module source reader and watching real registry hashes
-    move for exactly the dependent queries."""
+    """An edit to a shared helper in ``operators/`` must change the
+    content hash of every certified query that executes it — proven
+    here by swapping the module source reader and watching real
+    registry hashes move for exactly the dependent queries."""
     from hivetomysql_spark import certify
     from hivetomysql_spark.queries import REGISTRY, _load_all
 
     _load_all()
     # ml_calibration_bins imports operators.ranks fn-locally;
     # dedup_simhash_pairs uses the module-level `D = operators.dedup`
-    # binding (the exact style commit 08af627 walked through);
-    # parity_mapping uses no operators at all.
-    assert "ranks" in certify._operator_deps(REGISTRY["ml_calibration_bins"].fn)
-    assert "dedup" in certify._operator_deps(REGISTRY["dedup_simhash_pairs"].fn)
-    assert certify._operator_deps(REGISTRY["parity_mapping"].fn) == []
+    # binding; parity_mapping uses no operators at all.
+    assert "ranks" in _keys(REGISTRY["ml_calibration_bins"].fn, "op")
+    assert "dedup" in _keys(REGISTRY["dedup_simhash_pairs"].fn, "op")
+    assert _keys(REGISTRY["parity_mapping"].fn, "op") == []
 
     def h(name):
         q = REGISTRY[name]
@@ -120,13 +139,7 @@ def test_operator_edit_trips_staleness(monkeypatch):
 
     before = {n: h(n) for n in
               ("ml_calibration_bins", "dedup_simhash_pairs", "parity_mapping")}
-    real = certify._op_source
-
-    def edited(mod):
-        src = real(mod)
-        return src + "\n# edited\n" if mod in ("ranks", "dedup") else src
-
-    monkeypatch.setattr(certify, "_op_source", edited)
+    _edit_source(monkeypatch, "operators.ranks", "operators.dedup")
     assert h("ml_calibration_bins") != before["ml_calibration_bins"]
     assert h("dedup_simhash_pairs") != before["dedup_simhash_pairs"]
     assert h("parity_mapping") == before["parity_mapping"]
@@ -139,52 +152,41 @@ def test_operator_edit_transitive(monkeypatch):
     from hivetomysql_spark.queries import REGISTRY, _load_all
 
     _load_all()
-    deps = certify._operator_deps(REGISTRY["dedup_simhash_pairs"].fn)
-    assert "parallelism" in deps, deps
     q = REGISTRY["dedup_simhash_pairs"]
+    deps = _keys(q.fn, "op")
+    assert "parallelism" in deps, deps
     before = certify.query_hash(q.name, q.fn, q.oracle)
-    real = certify._op_source
-    monkeypatch.setattr(
-        certify,
-        "_op_source",
-        lambda m: real(m) + "\n#x\n" if m == "parallelism" else real(m),
-    )
+    _edit_source(monkeypatch, "operators.parallelism")
     assert certify.query_hash(q.name, q.fn, q.oracle) != before
 
 
 def test_streaming_helper_edit_trips_staleness(monkeypatch):
-    """r10: the same blind-spot class as operators/, for streaming/ —
-    an edit to ``streaming/windows.py`` changed stream_enrich_batch's
-    executed plan without tripping its certification. The streaming
-    salt must move exactly the dependent queries' hashes."""
+    """The same walk covers ``streaming/``: an edit to
+    ``streaming/windows.py`` changes stream_enrich_batch's executed
+    plan, so it must move exactly the dependent queries' hashes."""
     from hivetomysql_spark import certify
     from hivetomysql_spark.queries import REGISTRY, _load_all
 
     _load_all()
     seb = REGISTRY["stream_enrich_batch"]
     pm = REGISTRY["parity_mapping"]
-    assert "windows" in certify._helper_deps(seb.fn)[1]
-    assert certify._helper_deps(pm.fn)[1] == []
+    assert "windows" in _keys(seb.fn, "stream")
+    assert _keys(pm.fn, "stream") == []
     before_seb = certify.query_hash(seb.name, seb.fn, seb.oracle)
     before_pm = certify.query_hash(pm.name, pm.fn, pm.oracle)
-    real = certify._st_source
-    monkeypatch.setattr(
-        certify,
-        "_st_source",
-        lambda m: real(m) + "\n#x\n" if m == "windows" else real(m),
-    )
+    _edit_source(monkeypatch, "streaming.windows")
     assert certify.query_hash(seb.name, seb.fn, seb.oracle) != before_seb
     assert certify.query_hash(pm.name, pm.fn, pm.oracle) == before_pm
 
 
 def test_core_module_edit_trips_staleness(monkeypatch):
-    """r11 (verdict r10 #2): the last two documented salt blind spots
-    — ``tables.py`` and ``sources/*`` (with ``config``/``pipeline``
-    and the rest of the core modules) — are closed. A ``tables.py``
-    edit is exactly one NTZ-cast away from re-running the r03 bench
-    incident (BASELINE.md:28-32), so it must move the hash of every
-    certified query that loads a fixture table; ``etl_date_dimension``
-    (zero input tables, sequence+explode) must NOT move."""
+    """Every other package module — ``tables.py``, ``sources/*``,
+    ``config``/``pipeline`` and the rest — is salted too. A
+    ``tables.py`` edit is exactly one NTZ-cast away from re-running
+    the r03 bench incident (BASELINE.md:28-32), so it must move the
+    hash of every certified query that loads a fixture table;
+    ``etl_date_dimension`` (zero input tables, sequence+explode) must
+    NOT move."""
     from hivetomysql_spark import certify
     from hivetomysql_spark.queries import REGISTRY, _load_all
 
@@ -193,10 +195,10 @@ def test_core_module_edit_trips_staleness(monkeypatch):
     # via a module-local helper only (parity_mapping → run_pipeline —
     # which also pulls config/pipeline/errors), and not at all
     # (etl_date_dimension)
-    assert "tables" in certify._helper_deps(REGISTRY["dedup_simhash_pairs"].fn)[2]
-    pm_cores = certify._helper_deps(REGISTRY["parity_mapping"].fn)[2]
+    assert "tables" in _keys(REGISTRY["dedup_simhash_pairs"].fn, "core")
+    pm_cores = _keys(REGISTRY["parity_mapping"].fn, "core")
     assert {"tables", "config", "pipeline", "errors"} <= set(pm_cores)
-    assert "tables" not in certify._helper_deps(REGISTRY["etl_date_dimension"].fn)[2]
+    assert "tables" not in _keys(REGISTRY["etl_date_dimension"].fn, "core")
 
     def h(name):
         q = REGISTRY[name]
@@ -204,12 +206,7 @@ def test_core_module_edit_trips_staleness(monkeypatch):
 
     names = ("dedup_simhash_pairs", "parity_mapping", "etl_date_dimension")
     before = {n: h(n) for n in names}
-    real = certify._core_source
-    monkeypatch.setattr(
-        certify,
-        "_core_source",
-        lambda m: real(m) + "\n#x\n" if m == "tables" else real(m),
-    )
+    _edit_source(monkeypatch, "tables")
     assert h("dedup_simhash_pairs") != before["dedup_simhash_pairs"]
     assert h("parity_mapping") != before["parity_mapping"]
     assert h("etl_date_dimension") == before["etl_date_dimension"]
@@ -229,16 +226,11 @@ def test_core_module_closure_reaches_sources(monkeypatch):
 
         return read_tsv_dump(spark, sf_dir)
 
-    deps = certify._helper_deps(q)[2]
+    deps = _keys(q, "core")
     assert "sources" in deps
     assert "sources.readers" in deps, deps  # via the __init__ closure
     before = certify.query_hash("q", q, None)
-    real = certify._core_source
-    monkeypatch.setattr(
-        certify,
-        "_core_source",
-        lambda m: real(m) + "\n#x\n" if m == "sources.readers" else real(m),
-    )
+    _edit_source(monkeypatch, "sources.readers")
     assert certify.query_hash("q", q, None) != before
 
 
@@ -306,22 +298,3 @@ def test_rotation_log_parse_covers_all_tag_forms():
         got = rx.match(line)
         assert got, f"regex missed: {line!r}"
         assert (got.group(1), got.group(2)) == (tag, name), line
-
-
-def test_presnapshot_gate_passes_on_current_tree():
-    """tools/presnapshot.py (verdict r9 #7): the committable tree must
-    carry zero stale certifications — this is the same check the
-    staleness test above makes, exposed as a fast pre-commit command
-    and exercised here end-to-end."""
-    import subprocess
-    import sys
-
-    proc = subprocess.run(
-        [sys.executable, os.path.join(ROOT, "tools", "presnapshot.py"),
-         "--allow-dirty"],
-        capture_output=True,
-        text=True,
-        cwd=ROOT,
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-    assert "safe to snapshot" in proc.stdout

@@ -735,22 +735,15 @@ def test_recent_events_liststate_matches_batch_twin(spark, sf_dir, tmp_path):
     assert final == twin
 
 
-def test_write_stream_to_jdbc_loads_every_microbatch(spark, tmp_path, monkeypatch):
+def test_write_stream_to_jdbc_loads_every_microbatch(spark, tmp_path):
     """``write_stream_to_jdbc`` sends each microbatch through the batch
-    JDBC sink: two files, one per trigger, land in a Derby target (the
-    sink's dialect arguments bound to Derby's, its call unchanged)."""
-    import functools
-
+    JDBC sink: two files, one per trigger, land in a Derby target that
+    the conf's ``jdbc_*`` dialect keys alone select."""
     from hivetomysql_spark.config import DumpConf
-    from hivetomysql_spark.sinks import jdbc
     from hivetomysql_spark.sources import read_jdbc
     from hivetomysql_spark.streaming.windows import write_stream_to_jdbc
 
     url = f"jdbc:derby:{tmp_path}/streamdb;create=true"
-    monkeypatch.setattr(jdbc, "write_jdbc", functools.partial(
-        jdbc.write_jdbc, url=url, url_params=None, ident_quote='"',
-        create_table_column_types="val VARCHAR(20), ds VARCHAR(20)",
-    ))
     src = tmp_path / "src"
     src.mkdir()
     (src / "a.json").write_text('{"val": "a", "ds": "1"}\n{"val": "b", "ds": "1"}\n')
@@ -760,7 +753,13 @@ def test_write_stream_to_jdbc_loads_every_microbatch(spark, tmp_path, monkeypatc
         .option("maxFilesPerTrigger", 1)
         .json(str(src))
     )
-    conf = DumpConf.from_text("mysql_table=app_stream\n")
+    conf = DumpConf.from_text(
+        "mysql_table=app_stream\n"
+        f"jdbc_url={url}\n"
+        "jdbc_url_params=\n"
+        'jdbc_ident_quote="\n'
+        "jdbc_create_types=val VARCHAR(20), ds VARCHAR(20)\n"
+    )
     q = (
         write_stream_to_jdbc(stream, conf, None, str(tmp_path / "ckpt"))
         .trigger(availableNow=True)

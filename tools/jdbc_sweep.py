@@ -51,15 +51,17 @@ def main() -> int:
         for batch in BATCH:
             dbdir = f"/tmp/jdbc_sweep_db_{parts}_{batch}"
             shutil.rmtree(dbdir, ignore_errors=True)
-            url = f"jdbc:derby:{dbdir};create=true"
-            conf = DumpConf.from_text("mysql_table=sweep_t\nds=20240101\n")
+            conf = DumpConf.from_text(
+                "mysql_table=sweep_t\nds=20240101\n"
+                f"jdbc_url=jdbc:derby:{dbdir};create=true\n"
+                "jdbc_url_params=\n"
+                'jdbc_ident_quote="\n'
+                "jdbc_create_types="
+                "val VARCHAR(30), ds VARCHAR(20), version VARCHAR(20)\n"
+            )
             d = df.repartition(parts)
             _, dt = timed(lambda: write_jdbc(
-                d, conf, None, url=url, url_params=None, ident_quote='"',
-                batch_size=batch, max_connections=parts,
-                create_table_column_types=(
-                    "val VARCHAR(30), ds VARCHAR(20), version VARCHAR(20)"
-                ),
+                d, conf, None, batch_size=batch, max_connections=parts
             ))
             results.append((parts, batch, dt, n / dt))
             print(f"{parts:>5} {batch:>6} {dt:>7.2f} {n / dt:>9.0f}")

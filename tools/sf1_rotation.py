@@ -10,7 +10,6 @@ consecutive rounds tile the registry with no clock involved.
 Usage: python tools/sf1_rotation.py [N] [--tag rN] [--dry]
        python tools/sf1_rotation.py --harvest LOG [--tag rN]
        python tools/sf1_rotation.py --seed-hashes
-       python tools/sf1_rotation.py --migrate
        python tools/sf1_rotation.py --recheck [--force a,b] [--tag rN]
   N          batch size (default 40)
   --tag      round tag written for new passes (default derived from
@@ -23,11 +22,6 @@ Usage: python tools/sf1_rotation.py [N] [--tag rN] [--dry]
   --seed-hashes  write the current content hash for every certified
              query that has none (valid only when the working tree
              IS the certified state, e.g. right after a full pass)
-  --migrate  one-time hash-formula migration (r10, operator salt):
-             every ledger entry whose LEGACY-formula hash still
-             matches gets its hash rewritten under the new formula
-             (content unchanged — tag preserved); entries whose
-             legacy hash drifted stay stale and must --recheck
   --recheck  re-run every certified query whose content hash drifted
              from the ledger (stale certifications) and refresh the
              hash on pass — the repair path the pytest staleness
@@ -47,7 +41,8 @@ Usage: python tools/sf1_rotation.py [N] [--tag rN] [--dry]
 Ledger format: {"certified": {name: roundTag}, "boundaries": {...},
 "hashes": {name: contentHash}} — hashes via
 hivetomysql_spark.certify.query_hash (fn source + oracle SQL +
-py-oracle source + used operator-module sources).
+py-oracle source + the sources of the package modules and module-local
+helpers the query executes).
 """
 
 from __future__ import annotations
@@ -119,15 +114,12 @@ def main() -> int:
         del args[i : i + 2]
     seed_hashes = "--seed-hashes" in args
     recheck = "--recheck" in args
-    migrate = "--migrate" in args
     force: list[str] = []
     if "--force" in args:
         i = args.index("--force")
         force = [n for n in args[i + 1].split(",") if n]
         del args[i : i + 2]
-    args = [
-        a for a in args if a not in ("--seed-hashes", "--recheck", "--migrate")
-    ]
+    args = [a for a in args if a not in ("--seed-hashes", "--recheck")]
 
     state = json.load(open(CERT_PATH))
     certified = state["certified"]
@@ -138,38 +130,6 @@ def main() -> int:
     from hivetomysql_spark.certify import registry_hashes
 
     current = registry_hashes()
-
-    if migrate:
-        # every prior formula generation this ledger may carry:
-        # v1 = fn+oracle+py-oracle only; v2 = v1 + operator salt;
-        # v3 = + locals; v4 = + streaming; v5 = + core (r11)
-        legacies = [
-            registry_hashes(
-                include_ops=False, include_locals=False, include_core=False
-            ),
-            registry_hashes(
-                include_ops=True, include_locals=False, include_core=False
-            ),
-            registry_hashes(include_streaming=False, include_core=False),
-            registry_hashes(include_core=False),
-        ]
-        moved, already, stale = 0, 0, []
-        for name in certified:
-            if hashes.get(name) == current.get(name):
-                already += 1
-            elif any(hashes.get(name) == lg.get(name) for lg in legacies):
-                hashes[name] = current[name]
-                moved += 1
-            else:
-                stale.append(name)
-        state["hashes"] = dict(sorted(hashes.items()))
-        json.dump(state, open(CERT_PATH, "w"), indent=1)
-        print(
-            f"migrated {moved} hashes to the operator-salted formula; "
-            f"{already} already current; {len(stale)} stale "
-            f"(need --recheck): {stale or '-'}"
-        )
-        return 0
 
     if seed_hashes:
         added = 0
