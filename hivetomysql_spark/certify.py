@@ -39,9 +39,6 @@ Residual blind spots:
   surely as a semantic one;
 * dynamic dispatch (``importlib``, ``getattr`` on a module) is not
   followed;
-* a parenthesised multi-line import is read as binding the name
-  ``(``: its module is salted for every function whose text holds a
-  call such as ``f(x``, whether or not it uses the imported names;
 * a helper function imported from another query module is not salted
   (no registry query calls one at runtime today).
 """
@@ -69,6 +66,8 @@ _IMPORT_RE = re.compile(
     r"^(?:from\s+hivetomysql_spark((?:\.\w+)*)\s+import\s+(.+)|"
     r"import\s+hivetomysql_spark((?:\.\w+)+)\s+as\s+(\w+))\s*$"
 )
+# a bracketed name list, possibly spanning lines and holding comments
+_BRACKETED_RE = re.compile(r"\bimport\s*\(([^)]*)\)")
 
 _SRC_CACHE: dict[str, str] = {}
 _ALIAS_CACHE: dict[str, dict[str, tuple[str, str]]] = {}
@@ -126,6 +125,13 @@ def _module_aliases(module_name: str) -> dict[str, tuple[str, str]]:
             src = inspect.getsource(mod) if mod else ""
         except (OSError, TypeError):
             src = ""
+        # `import (\n a,\n b as c,\n)` binds a and c: read it as
+        # the one-line `import a, b as c,`
+        src = _BRACKETED_RE.sub(
+            lambda m: "import "
+            + " ".join(re.sub(r"#.*", "", m.group(1)).split()),
+            src,
+        )
         for line in src.splitlines():
             m = _IMPORT_RE.match(line)
             if not m:

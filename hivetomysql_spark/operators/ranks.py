@@ -1,29 +1,39 @@
-"""Distributed global ordering primitives — rank / running sum
+"""Distributed ordering primitives — rank / running sum / lag
 without a single-partition sort.
 
-A global ``Window.orderBy(...)`` is the classic Spark scale-killer:
-Catalyst plans it as ``Exchange SinglePartition`` + one sorted
-partition, so one task sorts the entire input regardless of cluster
-size. The reference has nothing like this (HiveToMysql.java:1-641
-copies rows); these helpers exist because a dozen registry queries
-(NTILE layouts, ROC/lift curves, KS statistics, sweep lines) need a
-TOTAL order over data-sized frames, and the scalable form is always
-the same two-level shape:
+``Window.orderBy(...)`` with no partition is the classic Spark
+scale-killer: Catalyst plans it as ``Exchange SinglePartition`` + one
+sorted partition, so one task sorts the entire input regardless of
+cluster size; ``Window.partitionBy(g).orderBy(...)`` over a bounded
+group key is the same hazard k times over. The reference has nothing
+like this (HiveToMysql.java:1-641 copies rows); these helpers exist
+because registry queries need an order over data-sized frames (NTILE
+layouts, ROC/lift curves, KS statistics, sweep lines, per-group
+ranks), and the scalable form is always the same two-level shape.
+
+There is ONE family, ``grouped_*(df, group_cols, key, ...)``. The
+global order is the call with no group columns (``group_cols=[]``):
 
 1. bucket rows by value range (``width_bucket`` over a broadcast
    min/max — ONE tiny aggregate, no sampling pass like
-   ``repartitionByRange``);
-2. rank / running-sum WITHIN each bucket (hash exchange on the
-   bucket id — fully parallel, the only data-sized shuffle);
-3. per-bucket totals — an O(buckets) aggregate that reuses the same
-   shuffle keys — cumulated by a global window over O(buckets) rows
-   and broadcast-joined back as offsets.
+   ``repartitionByRange``); boundaries are shared by all groups;
+2. rank / running-sum WITHIN each (group, bucket) (hash exchange on
+   those columns — fully parallel, the only data-sized shuffle);
+3. per-(group, bucket) totals — an O(groups x buckets) aggregate
+   that reuses the same shuffle keys — cumulated over each group's
+   earlier buckets by a window over that reduced frame and joined
+   back as offsets (``_join_back``).
 
-The only single-partition work is step 3's window over bucket
-subtotals (hundreds of rows at any scale). Equal keys always land in
+Bucket ids are monotone in the value and equal keys always land in
 the same bucket (width_bucket is deterministic on the value), so
-within-bucket tie-breakers complete a total order exactly as a
-global sort would.
+offset + within-bucket result is exact and tie-breakers complete a
+total order exactly as a sort would. With no group columns the only
+single-partition work is step 3's window over O(buckets) rows.
+
+Join-back hint (``_join_back``): with no group columns the side
+frame is O(buckets) rows at any scale and is broadcast; with group
+columns it stays unhinted and AQE broadcasts it at runtime while it
+is small (the r10 broadcast-audit rule).
 
 Skew note: value-range buckets inherit the key's distribution — an
 exponential key concentrates ~ln(N)/n of all rows in the first
@@ -51,8 +61,8 @@ non-null (all current call sites are non-null TPC-H columns) or
 pre-map NULLs to an explicit sentinel that sorts where the window
 form puts them (e.g. ``coalesce(-k, lit(inf))`` for NULLS LAST).
 
-Adaptive dispatch (r12): every grouped primitive also carries the
-plain ``Window.partitionBy(group).orderBy(...)`` form and can pick
+Adaptive dispatch (r12): every primitive also carries the plain
+``Window.partitionBy(group).orderBy(...)`` form and can pick
 between the two at runtime from a measured per-group bound —
 ``dispatch="auto"`` runs one partially-aggregated count
 (:func:`max_group_rows`, or the caller passes a pre-measured
@@ -268,179 +278,12 @@ def with_value_buckets(
     return b.withColumn(BUCKET, bucket).drop("__lo", "__hi")
 
 
-def _bucket_offsets(
-    bucketed: DataFrame, agg: Column, out: str
-) -> DataFrame:
-    """Exclusive per-bucket prefix totals — O(buckets) rows, cumulated
-    by a global window over that reduced frame (the safe class).
-    NULL when no preceding bucket has a non-null total (the strictly
-    empty prefix), exactly as an exclusive SUM window frame — callers
-    combine with NULL-aware addition to keep window semantics for
-    nullable values."""
-    totals = bucketed.groupBy(BUCKET).agg(agg.alias("__tot"))
-    w = Window.orderBy(BUCKET).rowsBetween(Window.unboundedPreceding, -1)
-    return totals.select(BUCKET, F.sum("__tot").over(w).alias(out))
-
-
 def _null_aware_add(a: Column, b: Column) -> Column:
     """a + b where NULL means 'no values yet', not unknown: NULL only
     when BOTH sides are NULL — SUM-over-window accumulation."""
     return F.when(
         a.isNull() & b.isNull(), F.lit(None)
     ).otherwise(F.coalesce(a, F.lit(0)) + F.coalesce(b, F.lit(0)))
-
-
-def global_row_number(
-    df: DataFrame,
-    key: str,
-    tiebreaks: list[str] | None = None,
-    out: str = "r",
-    n_buckets: int = 64,
-    bucket_mode: str = "range",
-) -> DataFrame:
-    """Global 1-based ROW_NUMBER ordered by (key, *tiebreaks) in the
-    two-level shape. With tiebreaks completing a total order the
-    result is exactly a global-sort row_number; with ties left
-    unbroken the multiset of (key, r) pairs is still deterministic
-    (only the assignment within a tie group floats), which is enough
-    for rank statistics evaluated per key value (KS, ROC)."""
-    tiebreaks = tiebreaks or []
-    bucketed = with_value_buckets(df, key, n_buckets, mode=bucket_mode)
-    local = F.row_number().over(
-        Window.partitionBy(BUCKET).orderBy(key, *tiebreaks)
-    )
-    offsets = _bucket_offsets(bucketed, F.count(F.lit(1)), "__off")
-    return (
-        bucketed.withColumn("__lr", local)
-        .join(F.broadcast(offsets), BUCKET)
-        .withColumn(
-            out,
-            (F.coalesce("__off", F.lit(0)) + F.col("__lr")).cast("long"),
-        )
-        .drop(BUCKET, "__lr", "__off")
-    )
-
-
-def global_running_sum(
-    df: DataFrame,
-    key: str,
-    value: str,
-    tiebreaks: list[str] | None = None,
-    out: str = "cum",
-    n_buckets: int = 64,
-    bucket_mode: str = "range",
-) -> DataFrame:
-    """Global running SUM(value) ordered by (key, *tiebreaks) — the
-    distributed sweep-line / prefix-sum primitive."""
-    tiebreaks = tiebreaks or []
-    bucketed = with_value_buckets(df, key, n_buckets, mode=bucket_mode)
-    local = F.sum(value).over(
-        Window.partitionBy(BUCKET)
-        .orderBy(key, *tiebreaks)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    offsets = _bucket_offsets(bucketed, F.sum(value), "__off")
-    return (
-        bucketed.withColumn("__ls", local)
-        .join(F.broadcast(offsets), BUCKET)
-        .withColumn(out, _null_aware_add(F.col("__off"), F.col("__ls")))
-        .drop(BUCKET, "__ls", "__off")
-    )
-
-
-def global_lag(
-    df: DataFrame,
-    key: str,
-    tiebreaks: list[str] | None = None,
-    value: str | None = None,
-    out: str = "prev",
-    n_buckets: int = 64,
-    bucket_mode: str = "range",
-) -> DataFrame:
-    """LAG(value) over the global (key, *tiebreaks) order in the
-    two-level shape: within-bucket lag (hash exchange on the bucket
-    id) plus a boundary exchange — each bucket's LAST value, an
-    O(buckets) aggregate, shifted one bucket and joined back to fill
-    each bucket's first row. Equal keys always share a bucket, so
-    the boundary hand-off never splits a tie group. The very first
-    row's lag is NULL, exactly as the window form.
-
-    NULL values propagate exactly (advice r9): the boundary value
-    rides in a one-field struct (so a bucket whose last value is NULL
-    hands off NULL, where a bare ``max_by`` would skip it), and only
-    the true FIRST row of each bucket takes the hand-off — a NULL
-    within-bucket lag on any later row means the predecessor's value
-    really was NULL and stays NULL."""
-    tiebreaks = tiebreaks or []
-    value = value or key
-    bucketed = with_value_buckets(df, key, n_buckets, mode=bucket_mode)
-    w = Window.partitionBy(BUCKET).orderBy(key, *tiebreaks)
-    lasts = bucketed.groupBy(BUCKET).agg(
-        F.max_by(
-            F.struct(F.col(value).alias("v")), F.struct(key, *tiebreaks)
-        ).alias("__last")
-    )
-    prev = lasts.select(
-        BUCKET,
-        F.lag("__last").over(Window.orderBy(BUCKET)).alias("__prev"),
-    )
-    return (
-        bucketed.withColumn("__ll", F.lag(value).over(w))
-        .withColumn("__rn", F.row_number().over(w))
-        .join(F.broadcast(prev), BUCKET)
-        .withColumn(
-            out,
-            F.when(F.col("__rn") == 1, F.col("__prev.v")).otherwise(
-                F.col("__ll")
-            ),
-        )
-        .drop(BUCKET, "__ll", "__rn", "__prev")
-    )
-
-
-def global_running_max_exclusive(
-    df: DataFrame,
-    key: str,
-    tiebreaks: list[str] | None = None,
-    value: str | None = None,
-    out: str = "seen_max",
-    n_buckets: int = 64,
-    bucket_mode: str = "range",
-) -> DataFrame:
-    """MAX(value) over all STRICTLY EARLIER rows in the global
-    (key, *tiebreaks) order — the running high-water-mark /
-    forward-carry primitive (NULL values are ignored by MAX, so a
-    conditional value column gives LAST_VALUE ... IGNORE NULLS
-    semantics whenever the carried value is monotone in the order,
-    e.g. carrying the last error TIMESTAMP through a time-ordered
-    stream). Two-level: within-bucket running max (hash exchange) +
-    each earlier bucket's max (O(buckets) frame) joined back; the
-    global first row gets NULL, exactly as the window form."""
-    tiebreaks = tiebreaks or []
-    value = value or key
-    bucketed = with_value_buckets(df, key, n_buckets, mode=bucket_mode)
-    local = F.max(value).over(
-        Window.partitionBy(BUCKET)
-        .orderBy(key, *tiebreaks)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    bmax = bucketed.groupBy(BUCKET).agg(F.max(value).alias("__bm"))
-    prev = bmax.select(
-        BUCKET,
-        F.max("__bm")
-        .over(
-            Window.orderBy(BUCKET).rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-        )
-        .alias("__pm"),
-    )
-    return (
-        bucketed.withColumn("__lm", local)
-        .join(F.broadcast(prev), BUCKET)
-        .withColumn(out, F.greatest("__lm", "__pm"))
-        .drop(BUCKET, "__lm", "__pm")
-    )
 
 
 def fractional_rank_map(
@@ -459,8 +302,9 @@ def fractional_rank_map(
     data-sized — hence the bucketed form, not a global window), then
     joined back by the caller. Small maps broadcast automatically."""
     vc = df.groupBy(col).agg(F.count(F.lit(1)).alias("__cnt"))
-    cum = global_running_sum(
-        vc, col, "__cnt", out="__cum", n_buckets=n_buckets, bucket_mode=bucket_mode
+    cum = grouped_row_number(
+        vc, [], col, out=None, sums={"__cum": "__cnt"},
+        n_buckets=n_buckets, bucket_mode=bucket_mode,
     )
     return cum.select(
         col,
@@ -468,81 +312,6 @@ def fractional_rank_map(
             F.col("__cum") - F.col("__cnt") + (F.col("__cnt") + 1) / 2.0
         ).alias(out),
     )
-
-
-def global_order_stats(
-    df: DataFrame,
-    key: str,
-    tiebreaks: list[str] | None = None,
-    sum_col: str | None = None,
-    rank_out: str = "r",
-    sum_out: str = "cum",
-    n_buckets: int = 64,
-    bucket_mode: str = "range",
-) -> DataFrame:
-    """Fused global ROW_NUMBER + running SUM(sum_col) over one
-    (key, *tiebreaks) order — one bucketing, one within-bucket window
-    pass, one O(buckets) offsets frame carrying both the count and
-    the sum prefix. Use instead of chaining global_row_number over
-    global_running_sum, which would re-bucket (and re-evaluate the
-    input lineage) twice."""
-    tiebreaks = tiebreaks or []
-    bucketed = with_value_buckets(df, key, n_buckets, mode=bucket_mode)
-    w = Window.partitionBy(BUCKET).orderBy(key, *tiebreaks)
-    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local = bucketed.withColumn("__lr", F.row_number().over(w))
-    if sum_col is not None:
-        local = local.withColumn("__ls", F.sum(sum_col).over(wsum))
-    aggs = [F.count(F.lit(1)).alias("__tc")]
-    if sum_col is not None:
-        aggs.append(F.sum(sum_col).alias("__ts"))
-    totals = bucketed.groupBy(BUCKET).agg(*aggs)
-    wb = Window.orderBy(BUCKET).rowsBetween(Window.unboundedPreceding, -1)
-    off_cols = [BUCKET, F.sum("__tc").over(wb).alias("__oc")]
-    if sum_col is not None:
-        off_cols.append(F.sum("__ts").over(wb).alias("__os"))
-    offsets = totals.select(*off_cols)
-    out = local.join(F.broadcast(offsets), BUCKET).withColumn(
-        rank_out,
-        (F.coalesce("__oc", F.lit(0)) + F.col("__lr")).cast("long"),
-    )
-    drop = [BUCKET, "__lr", "__oc"]
-    if sum_col is not None:
-        out = out.withColumn(
-            sum_out, _null_aware_add(F.col("__os"), F.col("__ls"))
-        )
-        drop += ["__ls", "__os"]
-    return out.drop(*drop)
-
-
-def global_ntile(
-    df: DataFrame,
-    n: int,
-    key: str,
-    tiebreaks: list[str] | None = None,
-    out: str = "bucket",
-    n_buckets: int = 64,
-    bucket_mode: str = "range",
-) -> DataFrame:
-    """Global NTILE(n) ordered by (key, *tiebreaks) from the
-    distributed row_number: with N total rows, base = N div n and
-    rem = N mod n, the first rem tiles hold base+1 rows — identical
-    to the SQL NTILE definition, with no single-partition sort."""
-    ranked = global_row_number(
-        df, key, tiebreaks, out="__r", n_buckets=n_buckets, bucket_mode=bucket_mode
-    )
-    total = df.agg(F.count(F.lit(1)).alias("__n"))
-    j = ranked.crossJoin(F.broadcast(total))
-    base = (F.col("__n") / n).cast("long")
-    rem = F.col("__n") % n
-    first_span = rem * (base + 1)
-    tile = F.when(
-        F.col("__r") <= first_span,
-        ((F.col("__r") - 1) / (base + 1)).cast("long") + 1,
-    ).otherwise(
-        rem + ((F.col("__r") - first_span - 1) / base).cast("long") + 1
-    )
-    return j.withColumn(out, tile.cast("int")).drop("__r", "__n")
 
 
 def _join_back(
@@ -559,10 +328,19 @@ def _join_back(
     those rows (r11 review). ``extra_cols`` (the bucket id — never
     NULL by construction) join with plain equality; EqualNullSafe is
     a first-class equi-join key, so broadcast/hash strategies are
-    unaffected."""
+    unaffected.
+
+    The hint follows the input: with no group columns the side frame
+    is O(buckets) rows at any scale and is broadcast (left to AQE,
+    the offsets would plan a sort-merge join and one more shuffle);
+    with group columns it is O(groups x buckets), unbounded in
+    general, and stays unhinted so AQE decides from its measured size
+    (the r10 broadcast-audit rule)."""
     sm = small
     for c in [*group_cols, *extra_cols]:
         sm = sm.withColumnRenamed(c, f"__jb_{c}")
+    if not group_cols:
+        sm = F.broadcast(sm)
     cond = None
     for c in group_cols:
         e = data[c].eqNullSafe(sm[f"__jb_{c}"])
@@ -570,9 +348,8 @@ def _join_back(
     for c in extra_cols:
         e = data[c] == sm[f"__jb_{c}"]
         cond = e if cond is None else cond & e
-    return data.join(sm, cond).drop(
-        *[f"__jb_{c}" for c in [*group_cols, *extra_cols]]
-    )
+    joined = data.crossJoin(sm) if cond is None else data.join(sm, cond)
+    return joined.drop(*[f"__jb_{c}" for c in [*group_cols, *extra_cols]])
 
 
 # Public name for query-level domain-reduction join-backs (r12): a
@@ -586,6 +363,18 @@ def _join_back(
 join_back = _join_back
 
 
+def _earlier_buckets(group_cols: list[str]) -> Window:
+    """Each group's strictly earlier buckets, over the
+    O(groups x buckets) totals frame — the exclusive prefix every
+    offset is cumulated over (NULL on a group's first bucket, exactly
+    as an exclusive window frame)."""
+    return (
+        Window.partitionBy(*group_cols)
+        .orderBy(BUCKET)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+
+
 def grouped_min_rank(
     df: DataFrame,
     group_cols: list[str],
@@ -597,27 +386,12 @@ def grouped_min_rank(
     max_group: int | None = None,
 ) -> DataFrame:
     """Per-group RANK() (min-rank, ties share the smallest position)
-    over ``key`` WITHIN each group, without a per-group
-    single-partition sort — the grouped member of the two-level
-    family above, for the low-cardinality-group case where
-    ``Window.partitionBy(group).orderBy(key)`` would put O(data/k)
-    rows into each of k sorted tasks (the same shape the r11
-    pandas-batch audit measured as one 20k-rows-and-growing pandas
-    frame per group in grouped-map applyInPandas).
-
-    Bucket boundaries are GLOBAL (one tiny aggregate, shared by all
-    groups): bucket id is monotone in the value, so within any group
-    min-rank = (group's rows in earlier buckets) + within-(group,
-    bucket) RANK(). Equal keys share a bucket (width_bucket /
-    boundary-count are pure functions of the value), so tie groups
-    never split across buckets and the offset+local decomposition is
-    exact. The only data-sized shuffle is the hash exchange on
-    (group, bucket) — parallelism k x n_buckets instead of k; the
-    offsets frame is O(k x n_buckets) rows, unhinted (AQE broadcasts
-    it at runtime while it is small; the r10 broadcast-audit rule).
-
-    NULL keys land in bucket 0 and rank FIRST within their group,
-    matching the ascending ``Window.orderBy`` default."""
+    over ``key`` WITHIN each group: min-rank = (group's rows in
+    earlier buckets) + within-(group, bucket) RANK(). Equal keys share
+    a bucket, so tie groups never split across buckets and the
+    offset+local decomposition is exact. NULL keys land in bucket 0
+    and rank FIRST within their group, matching the ascending
+    ``Window.orderBy`` default."""
     group_cols = list(group_cols)
     if _resolve_dispatch(df, group_cols, dispatch, max_group) == "window":
         return df.withColumn(
@@ -632,13 +406,10 @@ def grouped_min_rank(
     totals = bucketed.groupBy(*group_cols, BUCKET).agg(
         F.count(F.lit(1)).alias("__tc")
     )
-    wb = (
-        Window.partitionBy(*group_cols)
-        .orderBy(BUCKET)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     offsets = totals.select(
-        *group_cols, BUCKET, F.sum("__tc").over(wb).alias("__oc")
+        *group_cols,
+        BUCKET,
+        F.sum("__tc").over(_earlier_buckets(group_cols)).alias("__oc"),
     )
     out_df = _join_back(local, offsets, group_cols, [BUCKET]).withColumn(
         out,
@@ -652,34 +423,49 @@ def grouped_row_number(
     group_cols: list[str],
     key: str,
     tiebreaks: list[str] | None = None,
-    out: str = "r",
+    out: str | None = "r",
     n_buckets: int = 64,
     bucket_mode: str = "range",
     with_group_size: str | None = None,
     dispatch: str = "two_level",
     max_group: int | None = None,
+    sums: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Per-group ROW_NUMBER() over (key, *tiebreaks) without a
-    per-group single-partition sort — ``Window.partitionBy(group)
-    .orderBy(key)`` sorts O(data/k) rows in ONE task per group when
-    the group key is bounded (the r11 window audit's hazard
-    signature). Same decomposition as :func:`grouped_min_rank` with a
-    count offset instead of a rank offset; with tiebreaks completing
-    a total order the result is exactly the window form's.
+    """Per-group ROW_NUMBER() and/or running SUMs over (key,
+    *tiebreaks) from ONE bucketing pass: within-(group, bucket)
+    windows plus per-(group, bucket) count and sum offsets, cumulated
+    over one O(groups x buckets) totals frame. With tiebreaks
+    completing a total order the result is exactly the window form's.
+
+    ``out`` names the row number (``None``: no row number); ``sums``
+    maps output name -> value column for running sums (NULL until the
+    first non-null value, as SUM over a window frame). Asking for both
+    at once costs one pass, where chaining two calls would re-bucket
+    (and re-evaluate the input lineage) twice — cumulative-weight /
+    dual-CDF shapes (weighted medians, KS tests, shard boundaries).
     ``with_group_size`` additionally emits each group's row count
-    under that name, derived from the ALREADY-COMPUTED per-(group,
-    bucket) totals (an O(groups x buckets) -> O(groups) aggregate) —
-    use it instead of a second full-input groupBy when percent_rank
-    / cume_dist / NTILE arithmetic needs n."""
+    under that name — from the ALREADY-COMPUTED per-(group, bucket)
+    totals, or, with no group columns, from one scalar count of the
+    input (the totals route would plan its exchange a second time) —
+    for percent_rank / cume_dist / NTILE arithmetic."""
     group_cols = list(group_cols)
     tiebreaks = tiebreaks or []
+    sums = dict(sums or {})
+    order = [key, *tiebreaks]
     if _resolve_dispatch(df, group_cols, dispatch, max_group) == "window":
-        out_df = df.withColumn(
-            out,
-            F.row_number()
-            .over(Window.partitionBy(*group_cols).orderBy(key, *tiebreaks))
-            .cast("long"),
-        )
+        w = Window.partitionBy(*group_cols).orderBy(*order)
+        out_df = df
+        if out is not None:
+            out_df = out_df.withColumn(
+                out, F.row_number().over(w).cast("long")
+            )
+        for o, col in sums.items():
+            out_df = out_df.withColumn(
+                o,
+                F.sum(col).over(
+                    w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+                ),
+            )
         if with_group_size is not None:
             out_df = out_df.withColumn(
                 with_group_size,
@@ -687,31 +473,44 @@ def grouped_row_number(
             )
         return out_df
     bucketed = with_value_buckets(df, key, n_buckets, mode=bucket_mode)
-    w = Window.partitionBy(*group_cols, BUCKET).orderBy(key, *tiebreaks)
-    local = bucketed.withColumn("__lr", F.row_number().over(w))
-    totals = bucketed.groupBy(*group_cols, BUCKET).agg(
-        F.count(F.lit(1)).alias("__tc")
-    )
-    wb = (
-        Window.partitionBy(*group_cols)
-        .orderBy(BUCKET)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        *group_cols, BUCKET, F.sum("__tc").over(wb).alias("__oc")
-    )
-    out_df = (
-        _join_back(local, offsets, group_cols, [BUCKET])
-        .withColumn(
-            out,
-            (F.coalesce("__oc", F.lit(0)) + F.col("__lr")).cast("long"),
+    w = Window.partitionBy(*group_cols, BUCKET).orderBy(*order)
+    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    local, aggs = bucketed, []
+    if out is not None or with_group_size is not None:
+        aggs.append(F.count(F.lit(1)).alias("__tc"))
+    if out is not None:
+        local = local.withColumn("__lr", F.row_number().over(w))
+    for i, col in enumerate(sums.values()):
+        local = local.withColumn(f"__ls{i}", F.sum(col).over(wsum))
+        aggs.append(F.sum(col).alias(f"__ts{i}"))
+    totals = bucketed.groupBy(*group_cols, BUCKET).agg(*aggs)
+    wb = _earlier_buckets(group_cols)
+    off_cols = [
+        F.sum(f"__ts{i}").over(wb).alias(f"__os{i}") for i in range(len(sums))
+    ]
+    if out is not None:
+        off_cols.insert(0, F.sum("__tc").over(wb).alias("__oc"))
+    offsets = totals.select(*group_cols, BUCKET, *off_cols)
+    out_df = _join_back(local, offsets, group_cols, [BUCKET])
+    drop = [BUCKET]
+    if out is not None:
+        out_df = out_df.withColumn(
+            out, (F.coalesce("__oc", F.lit(0)) + F.col("__lr")).cast("long")
         )
-        .drop(BUCKET, "__lr", "__oc")
-    )
+        drop += ["__lr", "__oc"]
+    for i, o in enumerate(sums):
+        out_df = out_df.withColumn(
+            o, _null_aware_add(F.col(f"__os{i}"), F.col(f"__ls{i}"))
+        )
+        drop += [f"__ls{i}", f"__os{i}"]
+    out_df = out_df.drop(*drop)
     if with_group_size is not None:
-        sizes = totals.groupBy(*group_cols).agg(
-            F.sum("__tc").alias(with_group_size)
-        )
+        if group_cols:
+            sizes = totals.groupBy(*group_cols).agg(
+                F.sum("__tc").alias(with_group_size)
+            )
+        else:
+            sizes = df.agg(F.count(F.lit(1)).alias(with_group_size))
         out_df = _join_back(out_df, sizes, group_cols, [])
     return out_df
 
@@ -749,13 +548,10 @@ def grouped_dense_rank(
     totals = bucketed.groupBy(*group_cols, BUCKET).agg(
         F.countDistinct(F.struct(key)).alias("__td")
     )
-    wb = (
-        Window.partitionBy(*group_cols)
-        .orderBy(BUCKET)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     offsets = totals.select(
-        *group_cols, BUCKET, F.sum("__td").over(wb).alias("__od")
+        *group_cols,
+        BUCKET,
+        F.sum("__td").over(_earlier_buckets(group_cols)).alias("__od"),
     )
     return (
         _join_back(local, offsets, group_cols, [BUCKET])
@@ -780,11 +576,9 @@ def grouped_ntile(
     max_group: int | None = None,
 ) -> DataFrame:
     """Per-group NTILE(n) over (key, *tiebreaks) from the distributed
-    grouped row_number: with N rows in the group, base = N div n and
-    rem = N mod n, the first rem tiles hold base+1 rows — the SQL
-    NTILE definition, with no per-group single-partition sort. The
-    per-group totals frame is O(groups) rows, unhinted (AQE
-    broadcasts it while small — the r10 broadcast-audit rule)."""
+    row number and group size: with N rows in the group, base = N div
+    n and rem = N mod n, the first rem tiles hold base+1 rows — the
+    SQL NTILE definition, with no single-partition sort."""
     group_cols = list(group_cols)
     if _resolve_dispatch(df, group_cols, dispatch, max_group) == "window":
         return df.withColumn(
@@ -823,12 +617,15 @@ def grouped_running_max_exclusive(
     max_group: int | None = None,
 ) -> DataFrame:
     """Per-group MAX(value) over all STRICTLY EARLIER rows in the
-    group's (key, *tiebreaks) order — the grouped running
-    high-water-mark (sweep lines, Pareto frontiers, drawdowns over a
-    handful of classes). Two-level: within-(group, bucket) exclusive
-    running max + each earlier bucket's per-group max, prefix-maxed
-    over the O(groups x buckets) totals frame and joined back. The
-    group's first row gets NULL, exactly as the window form."""
+    group's (key, *tiebreaks) order — the running high-water-mark /
+    forward-carry primitive (sweep lines, Pareto frontiers,
+    drawdowns). MAX ignores NULL values, so a conditional value
+    column gives LAST_VALUE ... IGNORE NULLS semantics whenever the
+    carried value is monotone in the order (e.g. the last error
+    TIMESTAMP through a time-ordered stream). Two-level:
+    within-(group, bucket) exclusive running max + each earlier
+    bucket's max, prefix-maxed over the totals frame and joined back.
+    The group's first row gets NULL, exactly as the window form."""
     group_cols = list(group_cols)
     tiebreaks = tiebreaks or []
     value = value or key
@@ -853,84 +650,13 @@ def grouped_running_max_exclusive(
     prev = bmax.select(
         *group_cols,
         BUCKET,
-        F.max("__bm")
-        .over(
-            Window.partitionBy(*group_cols)
-            .orderBy(BUCKET)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        .alias("__pm"),
+        F.max("__bm").over(_earlier_buckets(group_cols)).alias("__pm"),
     )
     return (
         _join_back(bucketed.withColumn("__lm", local), prev, group_cols, [BUCKET])
         .withColumn(out, F.greatest("__lm", "__pm"))
         .drop(BUCKET, "__lm", "__pm")
     )
-
-
-def grouped_running_sums(
-    df: DataFrame,
-    group_cols: list[str],
-    key: str,
-    tiebreaks: list[str] | None = None,
-    sums: dict[str, str] | None = None,
-    n_buckets: int = 64,
-    bucket_mode: str = "range",
-    dispatch: str = "two_level",
-    max_group: int | None = None,
-) -> DataFrame:
-    """Per-group running SUM over (key, *tiebreaks) for one or more
-    value columns in ONE bucketing pass (``sums`` maps output name ->
-    value column) — the grouped member of the prefix-sum family, for
-    cumulative-weight / dual-CDF shapes (weighted medians, KS tests)
-    whose group key is bounded. Chaining grouped_running_sum twice
-    would re-shuffle the data once per column; this fuses them."""
-    group_cols = list(group_cols)
-    tiebreaks = tiebreaks or []
-    sums = dict(sums or {})
-    if _resolve_dispatch(df, group_cols, dispatch, max_group) == "window":
-        w = (
-            Window.partitionBy(*group_cols)
-            .orderBy(key, *tiebreaks)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        out_df = df
-        for o, col in sums.items():
-            out_df = out_df.withColumn(o, F.sum(col).over(w))
-        return out_df
-    bucketed = with_value_buckets(df, key, n_buckets, mode=bucket_mode)
-    w = (
-        Window.partitionBy(*group_cols, BUCKET)
-        .orderBy(key, *tiebreaks)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = bucketed
-    for i, (_out, col) in enumerate(sums.items()):
-        local = local.withColumn(f"__ls{i}", F.sum(col).over(w))
-    totals = bucketed.groupBy(*group_cols, BUCKET).agg(
-        *[F.sum(col).alias(f"__ts{i}") for i, col in enumerate(sums.values())]
-    )
-    wb = (
-        Window.partitionBy(*group_cols)
-        .orderBy(BUCKET)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        *group_cols,
-        BUCKET,
-        *[
-            F.sum(f"__ts{i}").over(wb).alias(f"__os{i}")
-            for i in range(len(sums))
-        ],
-    )
-    out_df = _join_back(local, offsets, group_cols, [BUCKET])
-    drop = [BUCKET]
-    for i, out in enumerate(sums):
-        out_df = out_df.withColumn(
-            out, _null_aware_add(F.col(f"__os{i}"), F.col(f"__ls{i}"))
-        )
-        drop += [f"__ls{i}", f"__os{i}"]
-    return out_df.drop(*drop)
 
 
 def grouped_lag(
@@ -945,13 +671,20 @@ def grouped_lag(
     dispatch: str = "two_level",
     max_group: int | None = None,
 ) -> DataFrame:
-    """LAG(value) over each group's (key, *tiebreaks) order — the
-    grouped twin of :func:`global_lag` (same boundary hand-off: each
-    (group, bucket)'s LAST value rides a one-field struct to the
-    group's next PRESENT bucket's first row, so NULL values propagate
-    exactly and sparse buckets are skipped, lag over the per-group
-    bucket frame being presence-ordered). Each group's first row gets
-    NULL, exactly as the window form."""
+    """LAG(value) over each group's (key, *tiebreaks) order:
+    within-(group, bucket) lag plus a boundary hand-off — each
+    (group, bucket)'s LAST value, an O(groups x buckets) aggregate,
+    lagged one PRESENT bucket (sparse buckets are skipped) and joined
+    back to fill each bucket's first row. Equal keys share a bucket,
+    so the hand-off never splits a tie group. Each group's first row
+    gets NULL, exactly as the window form.
+
+    NULL values propagate exactly (advice r9): the boundary value
+    rides in a one-field struct (so a bucket whose last value is NULL
+    hands off NULL, where a bare ``max_by`` would skip it), and only
+    the true FIRST row of each bucket takes the hand-off — a NULL
+    within-bucket lag on any later row means the predecessor's value
+    really was NULL and stays NULL."""
     group_cols = list(group_cols)
     tiebreaks = tiebreaks or []
     value = value or key

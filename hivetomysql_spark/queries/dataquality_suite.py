@@ -1229,15 +1229,17 @@ def dq_timestamp_sanity(spark: SparkSession, sf_dir: str) -> DataFrame:
     into data loss (cf. `stream_late_data_accounting`).
 
     Shape: one DISTRIBUTED ordered lag pass over the reduced
-    projection (operators/ranks.global_lag: within-bucket lag + a
+    projection (operators/ranks.grouped_lag with no group columns:
+    within-bucket lag + a
     one-row-per-bucket boundary hand-off — no single-partition sort;
     the r9 measured-row audit caught the previous events-sized global
     window), one rollup."""
-    from hivetomysql_spark.operators.ranks import global_lag
+    from hivetomysql_spark.operators.ranks import grouped_lag
 
     ev = load_table(spark, sf_dir, "events")
-    ordered = global_lag(
+    ordered = grouped_lag(
         ev.select("event_id", "ts"),
+        [],
         "ts",
         ["event_id"],
         value="event_id",

@@ -1290,12 +1290,14 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # running sums + broadcast offsets (operators/ranks) — the r9
     # measured-row audit caught the previous form running the whole
     # O(sessions) delta stream through one sorted partition
-    from hivetomysql_spark.operators.ranks import global_running_sum
+    from hivetomysql_spark.operators.ranks import grouped_row_number
 
     # the sweep frame is consumed twice (peak probe + final filter);
     # pin it so the bucketed machinery runs once
     sweep = (
-        global_running_sum(deltas, "t", "delta", ["delta"], out="concurrent")
+        grouped_row_number(
+            deltas, [], "t", ["delta"], out=None, sums={"concurrent": "delta"}
+        )
         .select("t", F.col("concurrent").cast("long").alias("concurrent"))
         .localCheckpoint()
     )
@@ -1551,17 +1553,19 @@ def stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics (`streaming/windows.py`).
 
     Shape: one DISTRIBUTED running-max over arrival order
-    (operators/ranks.global_running_max_exclusive: within-bucket
+    (operators/ranks.grouped_running_max_exclusive, no group columns:
+    within-bucket
     running max + earlier-bucket maxima joined back — no
     single-partition sort; the r9 measured-row audit caught the
     previous events-sized global window), one hourly aggregate."""
     from hivetomysql_spark.operators.ranks import (
-        global_running_max_exclusive,
+        grouped_running_max_exclusive,
     )
 
     ev = load_table(spark, sf_dir, "events")
-    seen = global_running_max_exclusive(
+    seen = grouped_running_max_exclusive(
         ev.select("ts", "event_id"),
+        [],
         "event_id",
         value="ts",
         out="seen_max",
@@ -1758,16 +1762,17 @@ def events_mtbf_mttr(spark: SparkSession, sf_dir: str) -> DataFrame:
     max of the conditional error timestamp — legal because the
     carried value (ts when error) is monotone in the (ts, event_id)
     order, so LAST == MAX over earlier rows
-    (operators/ranks.global_running_max_exclusive; the r9
+    (operators/ranks.grouped_running_max_exclusive with no group
+    columns; the r9
     measured-row audit caught the previous events-sized global
     window). Then one row_number per error epoch and two scalar
     aggregates."""
     from hivetomysql_spark.operators.ranks import (
-        global_running_max_exclusive,
+        grouped_running_max_exclusive,
     )
 
     ev = load_table(spark, sf_dir, "events")
-    seq = global_running_max_exclusive(
+    seq = grouped_running_max_exclusive(
         ev.select(
             "ts",
             "event_type",
@@ -1776,6 +1781,7 @@ def events_mtbf_mttr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "err_ts"
             ),
         ),
+        [],
         "ts",
         ["event_id"],
         value="err_ts",

@@ -426,7 +426,8 @@ def etl_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT a global ROW_NUMBER window (Exchange SinglePartition — one
     task numbers every row) and NOT monotonically_increasing_id
     (unique but sparse and partitioning-dependent). Rides
-    operators/ranks.global_row_number: value-range buckets over
+    operators/ranks.grouped_row_number with no group columns:
+    value-range buckets over
     doc_id (a CONSTANT 64 buckets at any scale), within-bucket
     row_number, O(buckets) offsets broadcast back. The previous
     hand-rolled form bucketed by floor(doc_id/64) — an O(N/64)
@@ -434,10 +435,11 @@ def etl_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit: 8 → 79 rows across one 10× step) and was cumsum'd by a
     global window, i.e. a data-sized serial frame at 100 TB.
     """
-    from hivetomysql_spark.operators.ranks import global_row_number
+    from hivetomysql_spark.operators.ranks import grouped_row_number
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return global_row_number(docs, "doc_id", out="sk").select("doc_id", "sk")
+    ranked = grouped_row_number(docs, [], "doc_id", out="sk")
+    return ranked.select("doc_id", "sk")
 
 
 @register(

@@ -561,16 +561,18 @@ def feature_ntile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact): NTILE(4) over the (value, key) order assigns equal-depth
     bins deterministically, then per-bin count/lo/hi/mean become the
     binning table a feature store persists. The NTILE is the
-    DISTRIBUTED two-level form (operators/ranks.global_ntile) — exact
+    DISTRIBUTED two-level form (operators/ranks.grouped_ntile with no
+    group columns) — exact
     quantiles with no single-partition sort; percentile_approx bin
     edges + a scan-side CASE remain the cheaper approximate twin at
     100 TB, same downstream schema."""
-    from hivetomysql_spark.operators.ranks import global_ntile
+    from hivetomysql_spark.operators.ranks import grouped_ntile
 
     o = load_table(spark, sf_dir, "orders")
     return (
-        global_ntile(
+        grouped_ntile(
             o.select("o_totalprice", "o_orderkey"),
+            [],
             4,
             "o_totalprice",
             ["o_orderkey"],
@@ -1147,7 +1149,7 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/ranks) → Σ pos(v)·frank(v). No per-row rank, no join
     back, no single-partition sort (the r9 measured-row audit caught
     the previous orders-sized global rank window)."""
-    from hivetomysql_spark.operators.ranks import global_running_sum
+    from hivetomysql_spark.operators.ranks import grouped_row_number
 
     o = load_table(spark, sf_dir, "orders")
     scored = o.select(
@@ -1157,7 +1159,7 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = scored.groupBy("s").agg(
         F.count(F.lit(1)).alias("cnt"), F.sum("y").alias("pos")
     )
-    cum = global_running_sum(per, "s", "cnt", out="cumcnt")
+    cum = grouped_row_number(per, [], "s", out=None, sums={"cumcnt": "cnt"})
     frank = F.col("cumcnt") - F.col("cnt") + (F.col("cnt") + 1) / 2.0
     return cum.agg(
         F.sum("pos").cast("long").alias("n_pos"),
@@ -1209,7 +1211,7 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast count, then one map-side-combined groupBy(bin). No
     single-partition sort (the r9 measured-row audit caught the
     previous orders-sized global window)."""
-    from hivetomysql_spark.operators.ranks import global_row_number
+    from hivetomysql_spark.operators.ranks import grouped_row_number
 
     o = load_table(spark, sf_dir, "orders")
     base = o.select(
@@ -1217,8 +1219,8 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
     )
-    ranked = global_row_number(
-        base, "o_totalprice", ["o_orderkey"], out="r"
+    ranked = grouped_row_number(
+        base, [], "o_totalprice", ["o_orderkey"], out="r"
     )
     n = base.agg(F.count(F.lit(1)).alias("__n"))
     # guard the single-row frame: percent_rank defines p=0.0 there,
@@ -1310,12 +1312,13 @@ def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     lift ≈ 1 everywhere on this fixture; the metric plumbing is
     what's verified.)
 
-    Shape: DISTRIBUTED NTILE (operators/ranks.global_ntile on the
+    Shape: DISTRIBUTED NTILE (operators/ranks.grouped_ntile, no group
+    columns, on the
     negated score — value-range buckets + broadcast offsets, no
     single-partition sort; the r9 measured-row audit caught the
     previous orders-sized global window), one O(10) aggregate +
     running sum over the decile frame."""
-    from hivetomysql_spark.operators.ranks import global_ntile
+    from hivetomysql_spark.operators.ranks import grouped_ntile
 
     o = load_table(spark, sf_dir, "orders")
     base = o.select(
@@ -1323,8 +1326,8 @@ def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         (-F.col("o_totalprice")).alias("negp"),
         "o_orderkey",
     )
-    scored = global_ntile(
-        base, 10, "negp", ["o_orderkey"], out="decile"
+    scored = grouped_ntile(
+        base, [], 10, "negp", ["o_orderkey"], out="decile"
     ).select("y", "decile")
     per = scored.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n"), F.sum("y").alias("pos")
@@ -1606,10 +1609,10 @@ def ml_precision_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     class imbalance where ROC flatters. (Independent score ⇒
     precision ≈ base rate at every threshold on this fixture.)
 
-    Shape: DISTRIBUTED NTILE (operators/ranks.global_ntile, same
+    Shape: DISTRIBUTED NTILE (operators/ranks.grouped_ntile, same
     form as `ml_lift_gains_table` — no single-partition sort), one
     O(10) aggregate + running sums over the decile frame."""
-    from hivetomysql_spark.operators.ranks import global_ntile
+    from hivetomysql_spark.operators.ranks import grouped_ntile
 
     o = load_table(spark, sf_dir, "orders")
     base = o.select(
@@ -1617,8 +1620,8 @@ def ml_precision_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         (-F.col("o_totalprice")).alias("negp"),
         "o_orderkey",
     )
-    scored = global_ntile(
-        base, 10, "negp", ["o_orderkey"], out="decile"
+    scored = grouped_ntile(
+        base, [], 10, "negp", ["o_orderkey"], out="decile"
     ).select("y", "decile")
     per = scored.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n"), F.sum("y").alias("pos")

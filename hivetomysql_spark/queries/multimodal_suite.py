@@ -85,7 +85,7 @@ def multimodal_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     value — + per-bucket windows + broadcast offsets). No
     single-partition sort; the r9 measured-row audit caught the
     previous corpus-sized global window."""
-    from hivetomysql_spark.operators.ranks import global_order_stats
+    from hivetomysql_spark.operators.ranks import grouped_row_number
 
     docs = load_table(spark, sf_dir, "documents")
     keyed = docs.select(
@@ -95,13 +95,14 @@ def multimodal_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "hk", F.conv(F.substring("h", 1, 13), 16, 10).cast("double")
     )
-    ordered = global_order_stats(
+    # one bucketing pass emits both the position and the running size
+    ordered = grouped_row_number(
         keyed,
+        [],
         "hk",
         ["h", "doc_id"],
-        sum_col="n_chars",
-        rank_out="pos",
-        sum_out="cum_incl",
+        out="pos",
+        sums={"cum_incl": "n_chars"},
     )
     assigned = ordered.select(
         "n_chars",

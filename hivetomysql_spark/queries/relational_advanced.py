@@ -380,11 +380,11 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scalable form: event_type is bounded (5 values), so the window
     form runs the cumulative-weight sweep over N/5 rows in one task
-    per type. grouped_running_sums does the same sweep two-level
-    ((type, value-bucket) hash exchange + O(types x buckets) offset
-    frame); the group total becomes a 5-row aggregate joined back
-    (AQE broadcasts it)."""
-    from hivetomysql_spark.operators.ranks import grouped_running_sums
+    per type. grouped_row_number's running sum does the same sweep
+    two-level ((type, value-bucket) hash exchange + O(types x buckets)
+    offset frame); the group total becomes a 5-row aggregate joined
+    back (AQE broadcasts it)."""
+    from hivetomysql_spark.operators.ranks import grouped_row_number
 
     ev = load_table(spark, sf_dir, "events")
     wtd = ev.select(
@@ -393,11 +393,12 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         (1 + F.col("event_id") % 3).alias("wt"),
         "event_id",
     )
-    cums = grouped_running_sums(
+    cums = grouped_row_number(
         wtd,
         ["event_type"],
         "value",
         ["event_id"],
+        out=None,
         sums={"cum": "wt"},
         # events.value is right-skewed — range buckets concentrate
         # 7x the mean in the low buckets (caught by the skew gate)

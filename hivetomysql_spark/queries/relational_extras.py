@@ -869,18 +869,19 @@ def layout_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bounded rectangle in (orderkey, partkey) space, so file-level
     min/max stats can skip on either column (a plain orderkey sort
     leaves partkey ranges spanning the whole domain). The NTILE is
-    the DISTRIBUTED form (operators/ranks.global_ntile): value-range
+    the DISTRIBUTED form (operators/ranks.grouped_ntile, no group
+    columns): value-range
     buckets on __z + per-bucket rank + broadcast offsets — the same
     shape as the range-partitioned write a real OPTIMIZE does. The r8
     measured-row audit caught the previous global-window form sorting
     all of lineitem on one partition."""
     from hivetomysql_spark.operators.layout import zorder_key
-    from hivetomysql_spark.operators.ranks import global_ntile
+    from hivetomysql_spark.operators.ranks import grouped_ntile
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     z = zorder_key(li, "l_orderkey", "l_partkey")
-    bucketed = global_ntile(
-        z, 16, "__z", ["l_orderkey", "l_partkey"], out="bucket"
+    bucketed = grouped_ntile(
+        z, [], 16, "__z", ["l_orderkey", "l_partkey"], out="bucket"
     )
     return bucketed.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n"),

@@ -345,12 +345,12 @@ def stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted jointly, so the step function is well-defined and
     engine-agnostic). One groupBy compresses the stream to distinct
     values, then both running CDFs in one fused grouped prefix-sum
-    pass (operators/ranks.grouped_running_sums — the distinct-value
-    frame is itself data-sized for near-continuous values, and
-    event_type is bounded, so a per-type ordered window would sort
-    N_distinct/5 rows in one task per type; r11 window audit). One
-    aggregate takes the sup."""
-    from hivetomysql_spark.operators.ranks import grouped_running_sums
+    pass (operators/ranks.grouped_row_number's running sums — the
+    distinct-value frame is itself data-sized for near-continuous
+    values, and event_type is bounded, so a per-type ordered window
+    would sort N_distinct/5 rows in one task per type; r11 window
+    audit). One aggregate takes the sup."""
+    from hivetomysql_spark.operators.ranks import grouped_row_number
 
     ev = load_table(spark, sf_dir, "events")
     per_val = ev.groupBy("event_type", "value").agg(
@@ -363,10 +363,11 @@ def stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2.07 s vs 1.59 s for the recompute form — the narrow columnar
     # re-scans are cheaper than materializing ~N rows and losing
     # codegen fusion. Left on the recompute form deliberately.
-    cum = grouped_running_sums(
+    cum = grouped_row_number(
         per_val,
         ["event_type"],
         "value",
+        out=None,
         sums={"cum_a": "a", "cum_b": "b"},
         bucket_mode="quantile",
     ).select("event_type", "a", "b", "cum_a", "cum_b")
@@ -2474,7 +2475,8 @@ def stats_exponential_gaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     — ties on g may order arbitrarily within a bucket, which cannot
     move the KS sup because tied gaps share their CDF value and the
     rank multiset per value is deterministic). The event-stream lag
-    is ALSO distributed (operators/ranks.global_lag: within-bucket
+    is ALSO distributed (operators/ranks.grouped_lag, no group
+    columns: within-bucket
     lag + a one-row-per-bucket boundary hand-off) — the r9
     measured-row audit caught the previous form single-partition-
     sorting both the event stream and the gaps.
@@ -2490,13 +2492,13 @@ def stats_exponential_gaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-tie-free at any scale, so quantile buckets stay balanced
     and only true same-instant pairs are dropped."""
     from hivetomysql_spark.operators.ranks import (
-        global_lag,
-        global_row_number,
+        grouped_lag,
+        grouped_row_number,
     )
 
     ev = load_table(spark, sf_dir, "events")
-    lagged = global_lag(
-        ev.select("ts", "event_id"), "ts", ["event_id"], out="prev_ts"
+    lagged = grouped_lag(
+        ev.select("ts", "event_id"), [], "ts", ["event_id"], out="prev_ts"
     )
     gaps = lagged.select(
         (F.unix_micros("ts") - F.unix_micros("prev_ts")).alias("g")
@@ -2509,7 +2511,9 @@ def stats_exponential_gaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query's own hypothesis!) exponential, so range buckets would
     # concentrate ~ln(N)/64 of all rows in bucket 1 — the documented
     # ranks.py skew caveat, closed in r10
-    ranked = global_row_number(gaps, "g", out="r", bucket_mode="quantile")
+    ranked = grouped_row_number(
+        gaps, [], "g", out="r", bucket_mode="quantile"
+    )
     # n2 (the KS denominator) is lam.n — same frame, no second
     # global count window needed
     j = ranked.crossJoin(F.broadcast(lam)).withColumn("n2", F.col("n"))

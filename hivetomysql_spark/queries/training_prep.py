@@ -112,7 +112,8 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     accounting here reports exactly that fill).
 
     The global running token count is NOT a single-partition window.
-    It rides operators/ranks.global_running_sum: value-range buckets
+    It rides operators/ranks.grouped_row_number's running sum with no
+    group columns: value-range buckets
     over doc_id (a CONSTANT 64 buckets at any scale), within-bucket
     cumsum, and an O(buckets) offsets frame broadcast back. The
     previous hand-rolled form bucketed by floor(doc_id/64) — an
@@ -121,7 +122,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     was itself cumsum'd by a global window: a data-sized serial frame
     in disguise at warehouse scale.
     """
-    from hivetomysql_spark.operators.ranks import global_running_sum
+    from hivetomysql_spark.operators.ranks import grouped_row_number
 
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
@@ -130,7 +131,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n"),
     )
-    cum = global_running_sum(d, "doc_id", "n", out="cum")
+    cum = grouped_row_number(d, [], "doc_id", out=None, sums={"cum": "n"})
     return (
         cum.groupBy(
             F.floor((F.col("cum") - F.col("n")) / CTX).cast("int").alias("bin")

@@ -119,36 +119,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # Shuffle codec, parameterized for deployment (r14, guide §2.3):
-        # measured at the derived sf10 on local[32], lz4 vs zstd is a
-        # wash (per-query ratios 0.92-1.19x, geomean ~1.01 — local
-        # shuffles are page-cache-backed, so the ratio-vs-CPU trade
-        # never bites). On a network-bound cluster zstd's better ratio
-        # wins; flip via SPARK_GRAFT_IO_CODEC without touching code.
-        # Default stays lz4 (Spark's default) so local bench records
-        # remain comparable round over round.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "hivetomysql_spark.worker_daemon")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    # Arrow batch rows, parameterized (r14, guide §4.2): the decode
-    # grid at derived sf10 (multimodal_features, ~16k-row partitions)
-    # measured min-of-3 8.10 s at the 10k default vs 6.73 s at 2000
-    # (batches pipeline through the two mapInPandas stages and peak
-    # pandas memory drops); sf0.1/sf1 partitions are smaller than one
-    # batch either way, so locally the default is timing-neutral. The
-    # DEFAULT stays Spark's 10k — this is a session-wide knob and the
-    # narrow-numeric Arrow surfaces prefer LARGER batches; deployments
-    # whose multimodal tier dominates set SPARK_GRAFT_ARROW_BATCH=2000.
-    arrow_batch = os.environ.get("SPARK_GRAFT_ARROW_BATCH")
-    if arrow_batch:
-        builder = builder.config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", arrow_batch
-        )
     if hive_support:
         builder = builder.enableHiveSupport()
     for k, v in (extra_conf or {}).items():

@@ -75,21 +75,6 @@ def write_bucketed_table(
     writer.saveAsTable(table)
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    sep: str = ",",
-    header: bool = True,
-) -> None:
-    (
-        df.write.mode(mode)
-        .option("sep", sep)
-        .option("header", str(header).lower())
-        .csv(path)
-    )
-
-
 def compact_files(
     spark,
     src_path: str,

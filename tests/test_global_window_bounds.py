@@ -71,8 +71,9 @@ GLOBAL_WINDOW_BOUNDS: dict[str, int] = {
     # domain, not fact rows; bound = 2x measured at sf0.01.
     # stats_kaplan_meier is the loosest of the class (distinct event
     # seconds grow with data until the calendar saturates); its
-    # scale path is exp(global_running_sum(ln(1-d/n))) on
-    # operators/ranks if it ever outgrows the bound.
+    # scale path is exp of a running sum of ln(1-d/n) (operators/ranks
+    # grouped_row_number with no group columns) if it ever outgrows
+    # the bound.
     "agg_abc_classification": 4000,
     "agg_gini_coefficient": 3000,
     "agg_kmv_set_operations": 4000,

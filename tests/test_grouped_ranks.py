@@ -150,8 +150,8 @@ def test_grouped_primitives_quantile_mode(spark):
 
 def test_grouped_running_sums_matches_window(spark):
     df = _frame(spark)
-    got = R.grouped_running_sums(
-        df, ["g"], "k", ["tb"], sums={"c1": "v", "c2": "tb"}
+    got = R.grouped_row_number(
+        df, ["g"], "k", ["tb"], out=None, sums={"c1": "v", "c2": "tb"}
     )
     wo = (
         W.partitionBy("g")
@@ -264,7 +264,9 @@ def test_grouped_primitives_preserve_cardinality(spark):
         == n
     )
     assert (
-        R.grouped_running_sums(df, ["g"], "k", ["tb"], sums={"c": "v"}).count()
+        R.grouped_row_number(
+            df, ["g"], "k", ["tb"], out=None, sums={"c": "v"}
+        ).count()
         == n
     )
     assert R.grouped_lag(df, ["g"], "k", ["tb"], value="v").count() == n
@@ -383,8 +385,8 @@ def test_dispatch_window_branch_equals_two_level_all_primitives(spark):
         lambda d, **kw: R.grouped_running_max_exclusive(
             d, ["g"], "k", ["tb"], value="v", out="o", **kw
         ),
-        lambda d, **kw: R.grouped_running_sums(
-            d, ["g"], "k", ["tb"], sums={"o": "v"}, **kw
+        lambda d, **kw: R.grouped_row_number(
+            d, ["g"], "k", ["tb"], out=None, sums={"o": "v"}, **kw
         ),
         lambda d, **kw: R.grouped_lag(
             d, ["g"], "k", ["tb"], value="v", out="o", **kw

@@ -44,9 +44,9 @@ GROWING_KEYS = {
 }
 # NOT exempted by name (r11 review): generic names like "bucket",
 # "band", "tok", "qid" are bound to BOUNDED keys elsewhere in the
-# codebase (global_ntile's out="bucket" is 16 tiles; LSH band counts
-# are fixed), so sites keyed on them must live in the measured
-# snapshot — a new one forces a re-run of the audit.
+# codebase (layout_zorder_clustering's NTILE out="bucket" is 16
+# tiles; LSH band counts are fixed), so sites keyed on them must live
+# in the measured snapshot — a new one forces a re-run of the audit.
 
 SNAPSHOT = os.path.join(
     os.path.dirname(os.path.abspath(__file__)),

@@ -42,8 +42,8 @@ def test_every_certified_query_has_a_hash(path):
     missing = sorted(set(state["certified"]) - set(state.get("hashes", {})))
     assert not missing, (
         f"{len(missing)} certified queries lack a content hash "
-        f"(run tools/sf1_rotation.py --seed-hashes after a full "
-        f"certification pass): {missing[:10]}"
+        f"(run `python tools/sf1_rotation.py --recheck`, which re-runs "
+        f"every entry without a current hash): {missing[:10]}"
     )
 
 
@@ -177,6 +177,22 @@ def test_streaming_helper_edit_trips_staleness(monkeypatch):
     _edit_source(monkeypatch, "streaming.windows")
     assert certify.query_hash(seb.name, seb.fn, seb.oracle) != before_seb
     assert certify.query_hash(pm.name, pm.fn, pm.oracle) == before_pm
+
+
+def test_bracketed_import_binds_the_names_it_lists():
+    """``from ...streaming.windows import (`` over several lines binds
+    the names inside the brackets, not ``(``: a query whose text only
+    holds calls such as ``F.lag(...)`` must not be salted with
+    ``streaming.windows``, while one that calls an imported name
+    keeps it."""
+    from hivetomysql_spark.queries import REGISTRY, _load_all
+
+    _load_all()
+    gap = REGISTRY["stream_gap_sessions_batch"].fn
+    enrich = REGISTRY["stream_enrich_batch"].fn
+    assert gap.__module__ == enrich.__module__
+    assert "windows" not in _keys(gap, "stream")
+    assert "windows" in _keys(enrich, "stream")
 
 
 def test_core_module_edit_trips_staleness(monkeypatch):

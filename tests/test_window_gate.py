@@ -72,9 +72,10 @@ GROWING_KEYS = {
     "event_id", "prev_err", "__tus",
 }
 # Generic names ("bucket", "band", "qid", "cid") are NOT exempted by
-# name (r11 review: global_ntile's default out="bucket" is 16 tiles
-# — a bounded key): sites keyed on them must pass via a reduce below
-# the window, a WindowGroupLimit, or an explicit ALLOWED entry.
+# name (r11 review: layout_zorder_clustering's NTILE out="bucket" is
+# 16 tiles — a bounded key): sites keyed on them must pass via a
+# reduce below the window, a WindowGroupLimit, or an explicit ALLOWED
+# entry.
 
 # (query, partition-key-tuple) -> reason, for sites none of the
 # structural rules cover. Keep reasons measurable.

@@ -124,6 +124,17 @@ def main() -> int:
     records: dict[str, dict] = {}
     spark = get_spark(app_name="diffcheck", master="local[8]", shuffle_partitions=8)
     con = duckdb.connect()
+    # DuckDB runs in this process beside the Spark driver JVM. Its
+    # default cap (80% of RAM) plus the driver heap overcommits a host
+    # with less than ~5x the heap in RAM: at the derived sf10 on 16 GB
+    # the kernel killed the JVM during an oracle and every later query
+    # failed with "Connection refused". Cap DuckDB at what the heap
+    # and 3 GiB for the JVM's own overhead and this process leave; it
+    # spills the rest to disk.
+    heap = spark._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    cap = max(1 << 30, min(ram * 4 // 5, ram - heap - (3 << 30)))
+    con.execute(f"SET memory_limit = '{cap >> 20}MB'")
     derived_scale = False
     for t in TABLE_NAMES:
         # driver fixtures are single files; derived sf1 fixtures

@@ -9,7 +9,6 @@ consecutive rounds tile the registry with no clock involved.
 
 Usage: python tools/sf1_rotation.py [N] [--tag rN] [--dry]
        python tools/sf1_rotation.py --harvest LOG [--tag rN]
-       python tools/sf1_rotation.py --seed-hashes
        python tools/sf1_rotation.py --recheck [--force a,b] [--tag rN]
   N          batch size (default 40)
   --tag      round tag written for new passes (default derived from
@@ -19,9 +18,6 @@ Usage: python tools/sf1_rotation.py [N] [--tag rN] [--dry]
              nohup run) and record its ok/FAIL lines in the ledger
              instead of running anything — lets long batches run
              outside any caller timeout and be recorded afterwards
-  --seed-hashes  write the current content hash for every certified
-             query that has none (valid only when the working tree
-             IS the certified state, e.g. right after a full pass)
   --recheck  re-run every certified query whose content hash drifted
              from the ledger (stale certifications) and refresh the
              hash on pass — the repair path the pytest staleness
@@ -33,7 +29,7 @@ Usage: python tools/sf1_rotation.py [N] [--tag rN] [--dry]
   --point    scale point (default sf1): `--point sf10` runs against
              .derived/sf10 and reads/writes SF10_CERTIFIED.json —
              the heavy-tier ledger (verdict r11 #1). All modes
-             (batch/--names/--recheck/--harvest/--seed-hashes) work
+             (batch/--names/--recheck/--harvest) work
              per point
   --names    comma-separated explicit batch (instead of tiling the
              registry) — how the curated sf10 heavy list is run
@@ -112,14 +108,13 @@ def main() -> int:
         i = args.index("--harvest")
         harvest = args[i + 1]
         del args[i : i + 2]
-    seed_hashes = "--seed-hashes" in args
     recheck = "--recheck" in args
     force: list[str] = []
     if "--force" in args:
         i = args.index("--force")
         force = [n for n in args[i + 1].split(",") if n]
         del args[i : i + 2]
-    args = [a for a in args if a not in ("--seed-hashes", "--recheck")]
+    args = [a for a in args if a != "--recheck"]
 
     state = json.load(open(CERT_PATH))
     certified = state["certified"]
@@ -130,17 +125,6 @@ def main() -> int:
     from hivetomysql_spark.certify import registry_hashes
 
     current = registry_hashes()
-
-    if seed_hashes:
-        added = 0
-        for name in certified:
-            if name not in hashes and name in current:
-                hashes[name] = current[name]
-                added += 1
-        state["hashes"] = dict(sorted(hashes.items()))
-        json.dump(state, open(CERT_PATH, "w"), indent=1)
-        print(f"seeded {added} hashes; {len(hashes)} total")
-        return 0
 
     if harvest:
         out = open(harvest).read()
